@@ -1532,6 +1532,34 @@ def _median(vals: list) -> float | None:
     return round(statistics.median(vals), 3)
 
 
+#: Ledger-row fields published as medians across a round's quiet windows.
+WINDOW_SCALARS = (
+    "suite_seconds",
+    "words_per_sec_median",
+    "capacity_margin",
+    "latency_p50_ms",
+    "latency_p95_ms",
+    "latency_p99_ms",
+)
+#: Ledger-row fields holding a per-name map (query -> seconds or ratio).
+WINDOW_DICTS = ("queries", "sf1_scaleup_ratio", "sf1_warm_ratio")
+
+
+def pool_windows(pool: list[dict]) -> dict:
+    """The one median-of-windows reducer behind every published median.
+
+    A scalar field maps to the median of its non-None window values.  A dict
+    field maps to ``(per-key medians, number of windows carrying the dict)``:
+    windows written before the field existed simply don't contribute, and a
+    key missing from one window's map doesn't drag the others."""
+    out: dict = {f: _median([w.get(f) for w in pool]) for f in WINDOW_SCALARS}
+    for f in WINDOW_DICTS:
+        maps = [w[f] for w in pool if isinstance(w.get(f), dict)]
+        keys = sorted(set().union(*maps))
+        out[f] = ({k: _median([m.get(k) for m in maps]) for k in keys}, len(maps))
+    return out
+
+
 def _loadavg1() -> float:
     try:
         return os.getloadavg()[0]
@@ -1698,87 +1726,53 @@ def main() -> int:
     # fired (every window contended) the artifacts carry an explicit
     # all_windows_contended flag (ADVICE r13).
     pool, n_contended_excluded, all_contended = quiet_pool(windows)
-    # Median-of-windows for the sf1 scale ratios too (VERDICT r10 #2):
-    # SCALE.md adjudicates per-query 10x ratios off THIS median, never off
-    # a single window.  Windows from runs where the sf1 leg was skipped
-    # (env toggle) simply don't contribute.
-    ratio_windows = [
-        w["sf1_scaleup_ratio"]
-        for w in pool
-        if isinstance(w.get("sf1_scaleup_ratio"), dict)
-    ]
-    if ratio_windows:
-        all_names = sorted(set().union(*ratio_windows))
-        sf1["scaleup_ratio_median_windows"] = {
-            n: _median([rw.get(n) for rw in ratio_windows]) for n in all_names
-        }
-        sf1["n_ratio_windows"] = len(ratio_windows)
-    # r15 (VERDICT r14 #3): median-of-windows for the controlled-warm
-    # ratios — the HEADLINE scale-up series SCALE.md adjudicates on; the
-    # single-shot window-sampled medians above stay published as context.
-    warm_windows = [
-        w["sf1_warm_ratio"]
-        for w in pool
-        if isinstance(w.get("sf1_warm_ratio"), dict)
-    ]
-    if warm_windows:
-        warm_names = sorted(set().union(*warm_windows))
-        sf1["warm_ratio_median_windows"] = {
-            n: _median([ww.get(n) for ww in warm_windows]) for n in warm_names
-        }
-        sf1["n_warm_ratio_windows"] = len(warm_windows)
-    suite_windows = [w.get("suite_seconds") for w in pool]
-    wps_windows = [w.get("words_per_sec_median") for w in pool]
+    pooled = pool_windows(pool)
+    # SCALE.md adjudicates the sf1 scale-up ratios (the controlled-warm
+    # series is the headline, the single-shot one context) off these
+    # medians; windows whose sf1 leg was skipped don't contribute.
+    ratios, n_ratio_windows = pooled["sf1_scaleup_ratio"]
+    if n_ratio_windows:
+        sf1["scaleup_ratio_median_windows"] = ratios
+        sf1["n_ratio_windows"] = n_ratio_windows
+    warm_ratios, n_warm_windows = pooled["sf1_warm_ratio"]
+    if n_warm_windows:
+        sf1["warm_ratio_median_windows"] = warm_ratios
+        sf1["n_warm_ratio_windows"] = n_warm_windows
     streaming["words_per_sec_median_window_this"] = streaming.get(
         "words_per_sec_median"
     )
-    streaming["words_per_sec_median"] = _median(wps_windows)
-    streaming["words_per_sec_windows"] = wps_windows
-    # Median-of-windows for the capacity margin too (VERDICT r11 #1): the
-    # 1.3x floor is adjudicated on the MEDIAN margin across this round's
-    # windows, same policy as the suite/words headlines.  This window's
-    # own margin (and its retry/floor flag) stays under live_capacity.
-    cap_windows = [w.get("capacity_margin") for w in pool]
-    cap_median = _median(cap_windows)
-    streaming["capacity_margin_windows"] = cap_windows
+    streaming["words_per_sec_median"] = pooled["words_per_sec_median"]
+    streaming["words_per_sec_windows"] = [w.get("words_per_sec_median") for w in pool]
+    # the 1.3x capacity floor is adjudicated on the median margin; this
+    # window's own margin (and its retry/floor flag) stays under live_capacity
+    cap_median = pooled["capacity_margin"]
+    streaming["capacity_margin_windows"] = [w.get("capacity_margin") for w in pool]
     streaming["capacity_margin_median"] = cap_median
     streaming["capacity_margin_median_below_floor"] = (
         cap_median is None or cap_median < CAPACITY_MARGIN_FLOOR
     )
-    # Median-of-windows for the latency percentiles too (VERDICT r12 #2):
-    # the published p50/p95/p99 are the medians across this round's quiet
-    # windows; this window's own percentiles stay under latency_ms.
     for pct in ("p50", "p95", "p99"):
-        streaming[f"latency_{pct}_ms_median"] = _median(
-            [w.get(f"latency_{pct}_ms") for w in pool]
-        )
-    # Median-of-windows for the PER-QUERY suite times too (VERDICT r13
-    # "what's wrong" #1): the published `queries` map is the per-query
-    # median across this round's quiet windows that carry the map (rows
-    # written before r14 don't and simply don't contribute); this run's
-    # own times stay in BENCH_DETAIL.json under queries_this_window.
-    query_windows = [
-        w["queries"] for w in pool if isinstance(w.get("queries"), dict)
-    ]
-    if query_windows:
-        qnames = sorted(set().union(*query_windows))
-        queries_median = {
-            n: _median([qw.get(n) for qw in query_windows]) for n in qnames
-        }
-    else:  # no window carries the map yet: this run's times, honestly tagged
+        streaming[f"latency_{pct}_ms_median"] = pooled[f"latency_{pct}_ms"]
+    # this run's own per-query times stay in BENCH_DETAIL.json under
+    # queries_this_window; with no window carrying the map yet they are
+    # also the published map, tagged by n_query_windows == 0
+    queries_median, n_query_windows = pooled["queries"]
+    if not n_query_windows:
         queries_median = timings
     detail = {
         "metric": "headline_suite_seconds",
-        "value": _median(suite_windows),
+        "value": pooled["suite_seconds"],
         "unit": "sec",
         "this_window_seconds": total,
-        "best_window_seconds": min(v for v in suite_windows if v is not None),
+        "best_window_seconds": min(
+            w["suite_seconds"] for w in pool if w.get("suite_seconds") is not None
+        ),
         "n_windows": len(windows),
         "n_windows_contended_excluded": n_contended_excluded,
         **({"all_windows_contended": True} if all_contended else {}),
         "queries": queries_median,
         "queries_this_window": timings,
-        "n_query_windows": len(query_windows),
+        "n_query_windows": n_query_windows,
         "suite_passes": suite_passes,
         "machine": machine,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

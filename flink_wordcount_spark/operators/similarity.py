@@ -20,65 +20,21 @@ from pyspark.sql import Window
 from ..hints import shuffle_partitions, spread
 
 
-#: The corpus embedding dimensionality (generator constant, asserted by
-#: tests/test_r16_ops.py against every testdata SF).  Used ONLY as the
-#: unroll fast-path hint below — a wrong value degrades to the fold, never
-#: to a wrong answer.
-EMB_DIM = 64
-
-
-def _unrolled_sum(terms: list[Column]) -> Column:
-    """((0.0 + t0) + t1) + ... — the exact left-fold order of F.aggregate
-    seeded with 0.0D, so the unrolled fast path is IEEE-bit-identical to
-    the higher-order fold it replaces."""
-    acc: Column = F.lit(0.0).cast("double")
-    for t in terms:
-        acc = acc + t
-    return acc
-
-
-def dot(a: Column, b: Column, unroll_dim: int | None = None) -> Column:
-    """Sequential-fold dot product (matches DuckDB's list fold order).
-
-    ``unroll_dim`` (r16, guide §4: move hot arithmetic off the interpreted
-    path): higher-order ``aggregate(zip_with(...))`` is CodegenFallback —
-    every row pays ~2*dim interpreted lambda dispatches plus a boxed
-    intermediate array, which made the candidate-scoring stages GC-bound
-    (embed_hard_negatives: 14-168 s/pass at sf0.1 for 1.6 M pairs).  With
-    the corpus dim passed in, rows where both arrays have exactly that
-    size take an unrolled a[0]*b[0] + ... + a[d-1]*b[d-1] expression —
-    plain codegen arithmetic, no allocation — in the SAME left-fold order,
-    so the result is bit-identical.  Any other row falls back to the fold
-    (the If evaluates branches lazily, so no out-of-bounds access ever
-    runs).  Only worth it at FLAT projection sites: inside another
-    higher-order lambda (e.g. rhp_buckets' per-plane transform) the whole
-    expression is interpreted anyway and the fold form is smaller.
-    """
-    fold = F.aggregate(
+def dot(a: Column, b: Column) -> Column:
+    """Sequential-fold dot product (matches DuckDB's list fold order)."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0).cast("double"),
         lambda acc, x: acc + x,
     )
-    if not unroll_dim:
-        return fold
-    unrolled = _unrolled_sum([a[i] * b[i] for i in range(unroll_dim)])
-    return F.when(
-        (F.size(a) == unroll_dim) & (F.size(b) == unroll_dim), unrolled
-    ).otherwise(fold)
 
 
-def norm(a: Column, unroll_dim: int | None = None) -> Column:
-    """L2 norm; ``unroll_dim`` as in :func:`dot` (same fold order: the
-    aggregate seeds 0.0 and adds x*x left to right)."""
-    fold = F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
-    if not unroll_dim:
-        return F.sqrt(fold)
-    unrolled = _unrolled_sum([a[i] * a[i] for i in range(unroll_dim)])
-    return F.sqrt(F.when(F.size(a) == unroll_dim, unrolled).otherwise(fold))
+def norm(a: Column) -> Column:
+    return F.sqrt(F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column, unroll_dim: int | None = None) -> Column:
-    return dot(a, b, unroll_dim) / (norm(a, unroll_dim) * norm(b, unroll_dim))
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def as_double(a: Column) -> Column:

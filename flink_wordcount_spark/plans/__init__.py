@@ -42,67 +42,15 @@ from . import catalog as _catalog
 # jump the queue regardless of prior green rows (ADVICE r03: the round-3
 # session-window oracle break shipped unverified precisely because a stale
 # green row pinned it behind the budget).  Reset this list each round.
-_MODIFIED_THIS_ROUND: list[str] = [
-    # r16: queries whose Spark plan was EDITED this round (optimization
-    # round 2 of 2).  Kept in sync commit-by-commit — the r15 round's
-    # mistake (VERDICT r15 "What's wrong" #1) was leaving this empty while
-    # ~25 plans were edited.
-    "dedup_shared_spans_hashed",  # r16: single-pass unique-span rollup
-    "dedup_shared_spans",  # r16: same rollup helper (string-keyed twin)
-    "ev_rolling_active_users",  # r16: interval-delta rollup, no x7 fan
-    "q5_local_supplier_volume",  # r16: base-table dim broadcasts, SMJ gone
-    # r16: prefix-filtered exact Jaccard join (operators/dedup.
-    # _prefix_jaccard_pairs) — every full-corpus jaccard_pairs caller:
-    "dedup_ngram_jaccard",
-    "dedup_cluster_representatives",
-    "dedup_keep_list",
-    "dedup_rate_by_source",
-    # curation_end_to_end: NOT modified — connected_components round
-    # batching was rejected by its own probe (fixpoint converges in 1-2
-    # rounds at both scales; plans/r16/cc_batching_probe.json).  It stays
-    # driver-verified via the r15-debt pin list below.
-    # q3_shipping_priority: NOT modified — the dim-first rewrite was
-    # rejected by its own interleaved A/B (plans/r16/ab_q3.json)
-]
+_MODIFIED_THIS_ROUND: list[str] = []
 
 # Queries to verify THIS round ahead of the staleness rotation even though
-# their code may be unchanged THIS round.  r16 (VERDICT r15 #1): the ~19
-# queries whose plans the r15 optimizer REWROTE but which never landed in a
-# driver verify sample — the round's verification debt.  Two r15 rewrites
-# (text_char_lm_score, embed_hard_negatives) were driver-sampled hash-green
-# in CORRECTNESS_r15 and are NOT re-pinned.  Budget arithmetic: 4 modified
-# (r16 edits, superset-listed above; overlap with this list is deduped by
-# _reorder) + 19 pinned − 2 overlap (dedup_shared_spans_hashed,
-# curation_end_to_end appear in both) = 21 head slots; the remaining ~29
-# slots fall to the staleness rotation, which is exactly the r11-stale
-# cohort (48 names at the histogram floor {r11:48, r12:46, r13:49, r14:50,
-# r15:50}) — ~29 of them rotate this round, the rest next round.
-#
-# STANDING NOTE for ~r17 (VERDICT r14 #6, survives context loss): when
-# the r12 cohort (46 names) rotates, pin BOTH `lsh_minhash_candidates_md5`
-# (value twin, r12-green) and its rows-only production twin
-# `lsh_minhash_candidates` in the SAME head, so the value check and the
-# rows-only check land in one artifact (VERDICT r12 #4 pairing rule).
+# their code may be unchanged THIS round.  The MinHash-LSH candidate pair
+# lands in one head: the value-checked twin and the rows-only production
+# query, so the value check and the rows-only check share one artifact.
 _PIN_FRONT_THIS_ROUND: list[str] = [
-    "dedup_edit_distance",
-    "curation_end_to_end",
-    "curation_filter_funnel",
-    "curation_quality_gate",
-    "text_repetition_ratio",
-    "dedup_embed_cosine",
-    "lsh_cosine_candidates",
-    "bm25_keyword_search",
-    "retrieval_rrf_fusion",
-    "retrieval_eval_ndcg",
-    "lsh_simhash64",
-    "lsh_simhash64_md5",
-    "dedup_minhash_estimate",
-    "dedup_minhash_verified",
-    "kmeans_embed_clusters",
-    "text_tfidf_top_terms",
-    "embed_cosine_topk",
-    "dedup_shared_spans_hashed",
-    "decontam_eval_overlap",
+    "lsh_minhash_candidates_md5",
+    "lsh_minhash_candidates",
 ]
 
 

@@ -457,7 +457,7 @@ def test_window_ledger_carries_per_query_times(tmp_path):
     the per-query MEDIAN across quiet windows, pre-r14 rows (no queries
     key) don't contribute, and a query missing from one window's map
     doesn't drag the others."""
-    from bench import _median, _window_ledger_update
+    from bench import _window_ledger_update, pool_windows
 
     (tmp_path / "BENCH_r13.json").write_text("{}")
     _window_ledger_update(20.0, 4e6, 0.5, root=tmp_path)  # pre-r14 row
@@ -472,11 +472,7 @@ def test_window_ledger_carries_per_query_times(tmp_path):
         {"q1": 1.0, "q2": 4.0},
         {"q1": 3.0},
     ]
-    query_windows = [x["queries"] for x in w if isinstance(x.get("queries"), dict)]
-    assert len(query_windows) == 2
-    names = sorted(set().union(*query_windows))
-    medians = {n: _median([qw.get(n) for qw in query_windows]) for n in names}
-    assert medians == {"q1": 2.0, "q2": 4.0}
+    assert pool_windows(w)["queries"] == ({"q1": 2.0, "q2": 4.0}, 2)
 
 
 def test_compact_line_carries_per_query_pool_size():
@@ -513,7 +509,7 @@ def test_window_ledger_sf1_ratio_median(tmp_path):
     """sf1 scale ratios pool across the round's windows exactly like the
     suite headline (VERDICT r10 #2): the published ratio is the median,
     and windows without an sf1 leg don't contribute."""
-    from bench import _median, _window_ledger_update
+    from bench import _window_ledger_update, pool_windows
 
     (tmp_path / "BENCH_r01.json").write_text("{}")
     _window_ledger_update(
@@ -523,14 +519,71 @@ def test_window_ledger_sf1_ratio_median(tmp_path):
     windows = _window_ledger_update(
         22.0, 4e6, 0.5, root=tmp_path, sf1_ratios={"a": 2.9, "b": 2.4}
     )
-    pools = [
-        w["sf1_scaleup_ratio"]
-        for w in windows
-        if isinstance(w.get("sf1_scaleup_ratio"), dict)
+    # the no-sf1 window contributes nothing
+    assert pool_windows(windows)["sf1_scaleup_ratio"] == ({"a": 3.5, "b": 2.2}, 2)
+
+
+def test_pool_windows_gives_the_published_medians():
+    """One reducer over the declared fields yields exactly the medians
+    bench.main() publishes for this quiet pool: suite `value`, streaming
+    words/s, capacity and latency medians, the per-query map with
+    n_query_windows, and both sf1 ratio series with their window counts.
+    None values and windows without a map don't contribute; the contended
+    window is dropped before pooling."""
+    from bench import pool_windows, quiet_pool
+
+    windows = [
+        {
+            "suite_seconds": 18.0,
+            "words_per_sec_median": 3e6,
+            "capacity_margin": 1.4,
+            "latency_p50_ms": 1500,
+            "latency_p95_ms": 2000,
+            "latency_p99_ms": 2500,
+            "queries": {"q1": 1.0, "q2": 4.0},
+            "sf1_scaleup_ratio": {"a": 4.1, "b": 2.0},
+            "sf1_warm_ratio": {"a": 2.0},
+        },
+        {
+            "suite_seconds": 45.0,
+            "contended": True,
+            "words_per_sec_median": 0.4e6,
+            "queries": {"q1": 9.0},
+        },
+        {
+            "suite_seconds": 21.0,
+            "words_per_sec_median": None,
+            "capacity_margin": None,
+            "latency_p50_ms": None,
+            "queries": {"q1": 3.0},
+            "sf1_scaleup_ratio": None,
+            "sf1_warm_ratio": {"a": 2.5, "c": 1.1},
+        },
+        {
+            "suite_seconds": 20.0,
+            "words_per_sec_median": 5e6,
+            "capacity_margin": 1.2,
+            "latency_p50_ms": 1700,
+            "latency_p95_ms": 2100,
+            "latency_p99_ms": 2600,
+            "sf1_scaleup_ratio": {"a": 2.9, "b": 2.4},
+        },
     ]
-    assert len(pools) == 2  # the no-sf1 window contributed nothing
-    assert _median([p.get("a") for p in pools]) == 3.5
-    assert _median([p.get("b") for p in pools]) == 2.2
+    pool, n_excluded, _ = quiet_pool(windows)
+    assert n_excluded == 1
+    assert pool_windows(pool) == {
+        "suite_seconds": 20.0,
+        "words_per_sec_median": 4_000_000.0,
+        "capacity_margin": 1.3,
+        "latency_p50_ms": 1600.0,
+        "latency_p95_ms": 2050.0,
+        "latency_p99_ms": 2550.0,
+        "queries": ({"q1": 2.0, "q2": 4.0}, 2),
+        "sf1_scaleup_ratio": ({"a": 3.5, "b": 2.2}, 2),
+        "sf1_warm_ratio": ({"a": 2.25, "c": 1.1}, 2),
+    }
+    # a pool with no maps at all: empty medians, zero windows
+    assert pool_windows([{"suite_seconds": 19.0}])["queries"] == ({}, 0)
 
 
 def test_adaptive_warmup_stops_when_flat():

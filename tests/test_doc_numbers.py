@@ -41,3 +41,32 @@ def test_kill_drill_quotes_match_artifact():
         f"doc-quoted kill-to-next-commit seconds {offenders} != artifact "
         f"median {median} (EXECUTOR_KILL_r12.json) — re-sync the prose"
     )
+
+
+#: "243 named queries (240 of them value-checked)" in README.md
+_README_COUNTS = re.compile(r"(\d+) named queries \((\d+) of them value-checked\)")
+#: "Totals: 243 declared queries — 240 oracle-checked, 3 deliberate
+#: rows-only (`a`, `b`, `c` — ..." in COVERAGE.md
+_COVERAGE_COUNTS = re.compile(
+    r"Totals: (\d+) declared queries — (\d+) oracle-checked, (\d+) deliberate\s+"
+    r"rows-only\s+\(([^—]*)—"
+)
+
+
+def test_query_counts_match_catalog():
+    """The README and COVERAGE query totals come from the catalog: every
+    declared query, the ones with an oracle, and the named rows-only rest."""
+    from flink_wordcount_spark.plans import ORACLES, QUERIES
+
+    rows_only = sorted(set(QUERIES) - set(ORACLES))
+    readme = _README_COUNTS.findall((REPO_ROOT / "README.md").read_text())
+    assert readme == [(str(len(QUERIES)), str(len(ORACLES)))]
+    coverage = _COVERAGE_COUNTS.findall((REPO_ROOT / "COVERAGE.md").read_text())
+    assert len(coverage) == 1, "COVERAGE.md totals line moved — update this guard"
+    n_all, n_oracle, n_rows_only, names = coverage[0]
+    assert (int(n_all), int(n_oracle), int(n_rows_only)) == (
+        len(QUERIES),
+        len(ORACLES),
+        len(rows_only),
+    )
+    assert sorted(re.findall(r"`(\w+)`", names)) == rows_only
