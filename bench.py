@@ -22,7 +22,13 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from flink_wordcount_spark.plans import QUERIES  # noqa: E402
-from flink_wordcount_spark.session import get_spark  # noqa: E402
+from flink_wordcount_spark.session import (  # noqa: E402
+    LIVE_STATE,
+    ROCKSDB_STATE,
+    TRACK_ROWS,
+    get_spark,
+    scoped_confs,
+)
 
 #: Headline set: the scale-critical shapes (fact-table aggs, multi-join,
 #: window, near-dedup, ANN, streaming, Arrow UDF path).
@@ -51,16 +57,10 @@ HEADLINE = [
 
 # Streaming throughput workload: sentences x words/sentence (reference
 # operating point: 100-word sentences, StatefulWordCount.java:64).
-STREAM_SENTENCES = int(os.environ.get("SPARK_GRAFT_BENCH_SENTENCES", "500000"))
+STREAM_SENTENCES = 500_000
 SENTENCE_SIZE = 100
-
-
-#: RocksDB state store: the representative provider at the real vocabulary's
-#: state cardinality (~355k keys); the HDFS-backed in-memory default stops
-#: being honest once state no longer trivially fits the executor heap.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+#: measured throughput attempts after the discarded JIT pre-pay runs
+THROUGHPUT_ATTEMPTS = 3
 
 #: Latency phase: live rate source at the reference operating rate
 #: (12,500 sentences/s, StatefulWordCount.java:64), sampled 1-in-1000.
@@ -74,8 +74,12 @@ ROCKSDB_PROVIDER = (
 #: that a 25 s warm-up doesn't cover (measured: p50 7.0 s at load~3 start vs
 #: 1.9 s steady) — the longer window lets the published p50 measure steady
 #: state; the full-window numbers stay in the artifact for auditability.
-LATENCY_RUN_SEC = int(os.environ.get("SPARK_GRAFT_BENCH_LATENCY_SEC", "110"))
-LATENCY_WARMUP_SEC = int(os.environ.get("SPARK_GRAFT_BENCH_LATENCY_WARMUP", "50"))
+LATENCY_RUN_SEC = 110
+LATENCY_WARMUP_SEC = 50
+
+#: the sf0.1 fixture: the headline suite's default scale and the source
+#: ``build_sf1`` replicates
+SF01 = "/root/testdata/sf0.1"
 
 
 def materialize(df) -> None:
@@ -182,18 +186,13 @@ def warm_jvm_for_latency(spark) -> dict:
     long-lived job is always JIT-warm; the bench must not bill HotSpot's
     first minute to the engine.
     """
-    from flink_wordcount_spark.operators.text import tokenize
     from flink_wordcount_spark.streaming.sentences import batch_golden
-    from pyspark.sql import functions as F
+    from flink_wordcount_spark.streaming.wordcount import sampled_counts
 
     t0 = time.time()
     for _ in range(3):
         g = batch_golden(spark, 300_000, sentence_size=100, sample_period=1000)
-        materialize(
-            tokenize(g, text_col="sentence", out_col="word")
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("c"), F.max("sample_ts").alias("ts"))
-        )
+        materialize(sampled_counts(g))
     batch_sec = round(time.time() - t0, 1)
     t0 = time.time()
     bench_latency(spark, run_sec=25, warmup_sec=20)  # throwaway, discarded
@@ -299,11 +298,7 @@ def bench_streaming_latency(spark) -> dict:
     5.2 -> 6.9 -> 6.9M.
     """
     path = _golden_sentences_path(spark)
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
+    with scoped_confs(spark, ROCKSDB_STATE):
         jit_warm = warm_jvm_for_latency(spark)
         latency = bench_latency(spark)
         _unload_state_stores(spark)
@@ -396,19 +391,6 @@ def bench_streaming_latency(spark) -> dict:
         # recovery last within this JVM: restart-to-first-commit is a small
         # timing-sensitive measurement and the unloads keep the JVM sane
         recovery = bench_recovery(spark, path)
-    finally:
-        # restore OR unset: leaving the RocksDB override in place when the
-        # conf was previously unset silently changes the shared session's
-        # default on the in-process fallback path (ADVICE r05)
-        if prev_provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        else:
-            try:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            except Exception:
-                pass
     return {
         "latency_ms": latency,
         "jit_warmup": jit_warm,
@@ -461,97 +443,63 @@ def bench_streaming_throughput(spark) -> dict:
     import tempfile
 
     from flink_wordcount_spark.streaming.sentences import wordlist
-    from flink_wordcount_spark.streaming.wordcount import run_to_completion
-    from flink_wordcount_spark.operators.text import tokenize
-    from pyspark.sql import functions as F
+    from flink_wordcount_spark.streaming.wordcount import (
+        file_replay_wordcount,
+        run_to_completion,
+    )
 
     vocab = len(wordlist())
     path = _golden_sentences_path(spark)
+    # row-count tracking off: see session.TRACK_ROWS
+    rocksdb = {**ROCKSDB_STATE, TRACK_ROWS: "false"}
 
-    # Row-count tracking does a GET for every PUT to maintain the
-    # numTotalStateRows metric; this workload updates ~355k keys per batch,
-    # so the tracking read IS the dominant RocksDB cost.  Measured (r07,
-    # chronological 4-attempt runs, same quiet machine): default
-    # [4.0, 2.7, 2.3, 2.8] M words/s vs tracking-off [3.4, 9.0, 9.9, 9.3] —
-    # the sustained rate matches the no-RocksDB default store (~9 M), i.e.
-    # the put path itself was never the bottleneck.  The metric is
-    # observability-only (Flink's wordcount tracks no such count either);
-    # the knob is published in the artifact.
-    _TRACK_ROWS_CONF = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-
-    def one_run(provider: str | None) -> tuple[int, float]:
-        if provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-            spark.conf.set(_TRACK_ROWS_CONF, "false")
-        else:
-            try:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            except Exception:
-                pass
-            try:
-                spark.conf.unset(_TRACK_ROWS_CONF)
-            except Exception:
-                pass
+    def one_run(confs: dict) -> tuple[int, float]:
         ckpt = tempfile.mkdtemp(prefix="fws_bench_ckpt_")
         try:
-            schema = spark.read.parquet(path).schema
-            stream = spark.readStream.schema(schema).parquet(path)
-            counts = (
-                tokenize(stream, text_col="sentence", out_col="word")
-                .groupBy("word")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            t0 = time.time()
-            result = run_to_completion(
-                counts,
-                output_mode="complete",
-                shuffle_partitions=0,  # keep the session's full parallelism
-                checkpoint_dir=ckpt,
-            )
-            total = sum(r.cnt for r in result.collect())
-            return total, time.time() - t0
+            with scoped_confs(spark, confs):
+                counts = file_replay_wordcount(spark, path, text_col="sentence")
+                t0 = time.time()
+                result = run_to_completion(
+                    counts,
+                    output_mode="complete",
+                    shuffle_partitions=0,  # keep the session's full parallelism
+                    checkpoint_dir=ckpt,
+                )
+                total = sum(r.cnt for r in result.collect())
+                return total, time.time() - t0
         finally:
             shutil.rmtree(ckpt, ignore_errors=True)
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    try:
-        n_attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3"))
-        # JIT pre-pay (VERDICT r10 #7): WARMUP_AB_r10 phase-isolated the
-        # 4.0-8.8 M words/s attempt spread to in-JVM HotSpot warm-up — a
-        # fresh JVM's FIRST full-size run always lands ~3.7-4.6 M
-        # regardless of phase ordering.  One discarded full-size run pays
-        # that cliff before anything is measured, so the measured attempts
-        # start on the warm side; its rate is published for audit (it
-        # should sit at the cold ~4 M level — if it matches the measured
-        # attempts instead, the cliff moved and the discard is free).
-        def _prepay_once() -> int:
-            w, d = one_run(ROCKSDB_PROVIDER)
-            _unload_state_stores(spark)
-            return round(w / d)
+    # JIT pre-pay (VERDICT r10 #7): WARMUP_AB_r10 phase-isolated the
+    # 4.0-8.8 M words/s attempt spread to in-JVM HotSpot warm-up — a
+    # fresh JVM's FIRST full-size run always lands ~3.7-4.6 M
+    # regardless of phase ordering.  One discarded full-size run pays
+    # that cliff before anything is measured, so the measured attempts
+    # start on the warm side; its rate is published for audit (it
+    # should sit at the cold ~4 M level — if it matches the measured
+    # attempts instead, the cliff moved and the discard is free).
+    def _prepay_once() -> int:
+        w, d = one_run(rocksdb)
+        _unload_state_stores(spark)
+        return round(w / d)
 
-        warm_rates = adaptive_warmup_rates(_prepay_once)
-        attempts = []
-        for _ in range(n_attempts):
-            attempts.append(one_run(ROCKSDB_PROVIDER))
-            _unload_state_stores(spark)
-        dt_attempts = sorted(d for _, d in attempts)
-        total_words, dt = min(attempts, key=lambda a: a[1])
-        dt_median = dt_attempts[len(dt_attempts) // 2]
-        _, dt_default = one_run(None)  # HDFS-backed memory store (Flink analog)
-    finally:
-        if prev_provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
+    warm_rates = adaptive_warmup_rates(_prepay_once)
+    attempts = []
+    for _ in range(THROUGHPUT_ATTEMPTS):
+        attempts.append(one_run(rocksdb))
+        _unload_state_stores(spark)
+    dt_attempts = sorted(d for _, d in attempts)
+    total_words, dt = min(attempts, key=lambda a: a[1])
+    dt_median = dt_attempts[len(dt_attempts) // 2]
+    # HDFS-backed memory store (Flink analog)
+    _, dt_default = one_run(dict.fromkeys(rocksdb))
     return {
         "sentences": STREAM_SENTENCES,
         "sentence_size": SENTENCE_SIZE,
         "vocabulary": vocab,
         "checkpointing": True,
         "state_store": "rocksdb",
-        "track_total_rows": False,  # observability metric off: see one_run note
+        "track_total_rows": False,  # observability metric off: session.TRACK_ROWS
         "words_total": total_words,
         "elapsed_sec": round(dt, 3),
         "words_per_sec_best": round(total_words / dt),
@@ -707,28 +655,20 @@ def bench_recovery(spark, golden_path: str) -> dict:
     from pyspark.sql import functions as F
 
     from flink_wordcount_spark.operators.text import tokenize
+    from flink_wordcount_spark.streaming.wordcount import (
+        file_replay_wordcount,
+        start_to_memory,
+    )
 
     ckpt_root = tempfile.mkdtemp(prefix="fws_bench_recovery_")
     name = "bench_recovery_counts"
 
     def start():
-        schema = spark.read.parquet(golden_path).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "4")
-            .parquet(golden_path)
+        counts = file_replay_wordcount(
+            spark, golden_path, text_col="sentence", max_files_per_trigger=4
         )
-        counts = (
-            tokenize(stream, text_col="sentence", out_col="word")
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        return (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(ckpt_root, "ckpt"))
-            .start()
+        return start_to_memory(
+            counts, name=name, checkpoint_dir=os.path.join(ckpt_root, "ckpt")
         )
 
     try:
@@ -774,10 +714,10 @@ def bench_recovery(spark, golden_path: str) -> dict:
 def bench_latency(
     spark,
     *,
-    trigger_sec: float | None = None,
-    partitions: int | None = None,
+    trigger_sec: float = 0.5,
+    partitions: int = 12,
     extra_confs: dict[str, str] | None = None,
-    run_sec: int | None = None,
+    run_sec: int = LATENCY_RUN_SEC,
     rows_per_second: int = 12500,
     gen_partitions: int = 16,
     warmup_sec: int | None = None,
@@ -805,50 +745,14 @@ def bench_latency(
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from flink_wordcount_spark.streaming.metrics import LatencyRecorder
     from flink_wordcount_spark.streaming.sentences import rate_stream
-    from flink_wordcount_spark.streaming.wordcount import tokens_stream
+    from flink_wordcount_spark.streaming.wordcount import sampled_counts
 
-    if trigger_sec is None:
-        trigger_sec = float(os.environ.get("SPARK_GRAFT_LATENCY_TRIGGER_SEC", "0.5"))
-    if partitions is None:
-        partitions = int(os.environ.get("SPARK_GRAFT_LATENCY_PARTITIONS", "12"))
-    if run_sec is None:
-        run_sec = LATENCY_RUN_SEC
     if warmup_sec is None:
         warmup_sec = min(LATENCY_WARMUP_SEC, max(0, run_sec - 15))
-    # Changelog checkpointing by default: per-batch durability becomes an
-    # append of the batch's delta instead of a full RocksDB snapshot upload,
-    # which is what keeps the commit path off the latency floor (measured in
-    # the sweep; also the 100 TB-state design: snapshot cost is amortized
-    # into background maintenance).
-    confs = {
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-            "true"
-        ),
-        # Root cause of the r05 commit spikes (VERDICT r05 #3, confirmed by
-        # the per-batch breakdown now captured below): even with changelog
-        # checkpointing, Spark creates a full RocksDB snapshot every
-        # minDeltasForSnapshot versions (default 10), and the memtable
-        # flush + local checkpoint for it runs INSIDE commit — measured as
-        # flush-dominated commit spikes on exactly every 10th batch (7.5-28 s
-        # flush, compaction/sync ~0). At 150 the cadence sits outside the
-        # measurement window: flush_ms drops to 0 in every observed commit
-        # and commit p99 lands within ~2x of p50. The trade is bounded
-        # recovery replay (<=150 per-batch changelogs, each a small delta);
-        # the recovery phase measures restart time independently.
-        "spark.sql.streaming.stateStore.minDeltasForSnapshot": "150",
-        # Row-count tracking does a GET per PUT for the numTotalStateRows
-        # metric — the dominant RocksDB cost at this key-update volume
-        # (measured 2-4x on the throughput path, ~10% exec here where the
-        # tokenize+shuffle share is larger; see bench_streaming_throughput).
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": (
-            "false"
-        ),
-        **(extra_confs or {}),
-    }
+    # RocksDB tuning for the live path: see session.LIVE_STATE
+    confs = {**LIVE_STATE, **(extra_confs or {})}
     # Flush pending OS writeback BEFORE the measured stream starts: the
     # warm-up phase writes GBs of parquet whose dirty pages hit their ~30 s
     # expiry right inside the measurement window, and the changelog's small
@@ -874,81 +778,61 @@ def bench_latency(
     # reading was incomplete.  8 starves tokenize+agg parallelism, 32 pays
     # maximal commit contention; 12 keeps batch exec (~0.8 s) under the
     # trigger with the smallest durability tax.
-    prev = {"spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions")}
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    for k, v in confs.items():
+    state_confs = {"spark.sql.shuffle.partitions": str(partitions), **confs}
+    with scoped_confs(spark, state_confs):
+        sentences = rate_stream(
+            spark,
+            rows_per_second=rows_per_second,
+            num_partitions=gen_partitions,
+            micro_batch=False,
+            ramp_up_sec=15,  # cover stream init: no manufactured startup backlog
+            sentence_size=SENTENCE_SIZE,
+            sample_period=1000,
+        )
+        q = (
+            sampled_counts(sentences).writeStream.outputMode("update")
+            .foreachBatch(LatencyRecorder(csv_path))
+            .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
+            .trigger(processingTime=f"{trigger_sec} seconds")
+            .start()
+        )
         try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
-    sentences = rate_stream(
-        spark,
-        rows_per_second=rows_per_second,
-        num_partitions=gen_partitions,
-        micro_batch=False,
-        ramp_up_sec=15,  # cover stream init: no manufactured startup backlog
-        sentence_size=SENTENCE_SIZE,
-        sample_period=1000,
-    )
-    counts = tokens_stream(sentences).groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt"), F.max("sample_ts").alias("sample_ts")
-    )
-    recorder = LatencyRecorder(csv_path)
-    q = (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(recorder)
-        .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
-        .trigger(processingTime=f"{trigger_sec} seconds")
-        .start()
-    )
-    progress: list[dict] = []
-    try:
-        time.sleep(run_sec)
-    finally:
-        try:
-            raw = [
-                json.loads(p.json) if hasattr(p, "json") else p
-                for p in q.recentProgress
-            ]
-            def _one(p: dict) -> dict:
-                op = (p.get("stateOperators") or [{}])[0]
-                cm = op.get("customMetrics") or {}
-                row = {
-                    "batchId": p["batchId"],
-                    "numInputRows": p["numInputRows"],
-                    "triggerExecution_ms": p["durationMs"].get("triggerExecution"),
-                    "addBatch_ms": p["durationMs"].get("addBatch"),
-                    "stateCommit_ms": op.get("commitTimeMs"),
-                }
-                # RocksDB commit-path breakdown (sums across partitions, ms):
-                # separates changelog-append cost (fileSync) from RocksDB's
-                # own flush/compaction and from snapshot maintenance — the
-                # evidence that attributes a commit spike (VERDICT r05 #3).
-                for short, key in (
-                    ("flush_ms", "rocksdbCommitFlushLatency"),
-                    ("compact_ms", "rocksdbCommitCompactLatency"),
-                    ("checkpoint_ms", "rocksdbCommitCheckpointLatency"),
-                    ("fileSync_ms", "rocksdbCommitFileSyncLatencyMs"),
-                    ("files_copied", "rocksdbFilesCopied"),
-                ):
-                    if key in cm:
-                        row[short] = cm[key]
-                return row
+            time.sleep(run_sec)
+            raw = q.recentProgress
+        finally:
+            q.stop()
+            q.awaitTermination(30)
 
-            progress = [_one(p) for p in raw if p.get("numInputRows", 0) > 0]
-        except Exception:
-            progress = []
-        q.stop()
-        q.awaitTermination(30)
-        for k, v in prev.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
+    def _one(p: dict) -> dict:
+        op = (p.get("stateOperators") or [{}])[0]
+        cm = op.get("customMetrics") or {}
+        row = {
+            "batchId": p["batchId"],
+            "numInputRows": p["numInputRows"],
+            "triggerExecution_ms": p["durationMs"].get("triggerExecution"),
+            "addBatch_ms": p["durationMs"].get("addBatch"),
+            "stateCommit_ms": op.get("commitTimeMs"),
+        }
+        # RocksDB commit-path breakdown (sums across partitions, ms):
+        # separates changelog-append cost (fileSync) from RocksDB's
+        # own flush/compaction and from snapshot maintenance — the
+        # evidence that attributes a commit spike (VERDICT r05 #3).
+        for short, key in (
+            ("flush_ms", "rocksdbCommitFlushLatency"),
+            ("compact_ms", "rocksdbCommitCompactLatency"),
+            ("checkpoint_ms", "rocksdbCommitCheckpointLatency"),
+            ("fileSync_ms", "rocksdbCommitFileSyncLatencyMs"),
+            ("files_copied", "rocksdbFilesCopied"),
+        ):
+            if key in cm:
+                row[short] = cm[key]
+        return row
+
+    try:
+        raw = [json.loads(p.json) if hasattr(p, "json") else p for p in raw]
+        progress = [_one(p) for p in raw if p.get("numInputRows", 0) > 0]
+    except Exception:
+        progress = []
     rows = [
         line.split(",")
         for line in open(csv_path).read().splitlines()[1:]
@@ -1182,7 +1066,7 @@ _SF1_KEYS = {
 }
 
 
-def build_sf1(spark, src_dir: str = "/root/testdata/sf0.1") -> str:
+def build_sf1(spark) -> str:
     """Materialize a synthetic ~sf1 as 10 key-shifted replicas of sf0.1.
 
     /root/testdata is read-only and has no sf1, so the 10x scaling probe
@@ -1217,7 +1101,7 @@ def build_sf1(spark, src_dir: str = "/root/testdata/sf0.1") -> str:
         dest = os.path.join(out_root, f"{name}.parquet")
         if os.path.exists(os.path.join(dest, "_SUCCESS")):
             continue
-        src = spark.read.parquet(f"{src_dir}/{name}.parquet")
+        src = spark.read.parquet(f"{SF01}/{name}.parquet")
         if not keys:
             src.write.mode("overwrite").parquet(dest)
             continue
@@ -1252,8 +1136,6 @@ def bench_sf1(spark) -> dict:
     """10x scaling spot-run: same plans, bigger data. Reports per-query
     seconds plus the ratio to the same query's sf0.1 time (measured fresh
     here so both sides share JVM warmth)."""
-    if os.environ.get("SPARK_GRAFT_BENCH_SF1", "1") != "1":
-        return {"skipped": True}
     t0 = time.time()
     sf1_dir = build_sf1(spark)
     build_sec = round(time.time() - t0, 3)
@@ -1261,7 +1143,7 @@ def bench_sf1(spark) -> dict:
     big: dict[str, float] = {}
     for name in SF1_QUERIES:
         t0 = time.time()
-        materialize(QUERIES[name](spark, "/root/testdata/sf0.1"))
+        materialize(QUERIES[name](spark, SF01))
         base[name] = round(time.time() - t0, 3)
         spark.catalog.clearCache()  # untimed; see run_suite
         t0 = time.time()
@@ -1277,7 +1159,7 @@ def bench_sf1(spark) -> dict:
         b3, g3 = [], []
         for _ in range(3):
             t0 = time.time()
-            materialize(QUERIES[name](spark, "/root/testdata/sf0.1"))
+            materialize(QUERIES[name](spark, SF01))
             b3.append(time.time() - t0)
             spark.catalog.clearCache()
         for _ in range(3):
@@ -1670,7 +1552,7 @@ def main() -> int:
         return streaming_only_main("latency")
     if "--throughput-only" in sys.argv:
         return streaming_only_main("throughput")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF01)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     machine = wait_for_quiet_machine()
     _tot0, _st0 = _cpu_totals()
@@ -1795,7 +1677,7 @@ def _sf1_compact(sf1: dict) -> dict:
     """The two scale-up series for the compact line (VERDICT r14 #3): the
     controlled-warm min-of-3 medians are the headline, the single-shot
     window-sampled medians for the SAME queries ride as context.  Empty
-    when the sf1 leg was skipped."""
+    when the sf1 dict carries no warm ratio."""
     warm = sf1.get("warm_ratio_median_windows") or sf1.get("warm_ratio")
     if not warm:
         return {}

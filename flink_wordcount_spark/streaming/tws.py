@@ -18,9 +18,9 @@ import time via ``os.getenv``; the 6.32/6.33 gap is within protobuf's
 cross-version wire guarantees for pure-Python runtimes). Check
 ``tws_available()`` before use; the applyInPandasWithState path in
 stateful.py remains the primary implementation. transformWithState also
-needs the RocksDB state store provider conf — scoped per query via the
-``rocksdb_state_store`` context manager (ADVICE r09: never leaked into
-the session).
+needs the RocksDB state store provider conf — scoped per query with
+``session.scoped_confs(spark, ROCKSDB_STATE)`` (ADVICE r09: never leaked
+into the session).
 """
 
 from __future__ import annotations
@@ -135,6 +135,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..session import ROCKSDB_STATE, scoped_confs
 
 OUTPUT_SCHEMA = StructType(
     [StructField("word", StringType()), StructField("cnt", LongType())]
@@ -299,7 +301,7 @@ def tws_windowed_counts(
 ) -> Iterator[DataFrame]:
     """(event_type, ts) watermarked stream -> timer-flushed per-type hourly
     window counts via MapState.  Context manager — see tws_timeout_flush."""
-    with rocksdb_state_store(stream.sparkSession):
+    with scoped_confs(stream.sparkSession, ROCKSDB_STATE):
         yield stream.groupBy("event_type").transformWithStateInPandas(
             statefulProcessor=WindowedCountProcessor(window_ms, gap_ms),
             outputStructType=WINDOWED_COUNT_SCHEMA,
@@ -446,7 +448,7 @@ def tws_session_paths(stream: DataFrame, gap_ms: int = 1_800_000) -> Iterator[Da
     """(user_id, ts, event_id, event_type) watermarked stream -> closed
     per-user session path strings via ListState.  Context manager — see
     tws_timeout_flush."""
-    with rocksdb_state_store(stream.sparkSession):
+    with scoped_confs(stream.sparkSession, ROCKSDB_STATE):
         yield stream.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=SessionPathProcessor(gap_ms),
             outputStructType=SESSION_PATH_SCHEMA,
@@ -511,39 +513,13 @@ def tws_bucket_claims(bands: DataFrame) -> Iterator[DataFrame]:
     """(doc_id, band_idx, band_key) stream -> one row per BLOCKED claim
     (a doc whose bucket was already owned by a smaller/earlier doc_id).
     Context manager — see tws_timeout_flush."""
-    with rocksdb_state_store(bands.sparkSession):
+    with scoped_confs(bands.sparkSession, ROCKSDB_STATE):
         yield bands.groupBy("band_idx", "band_key").transformWithStateInPandas(
             statefulProcessor=BucketClaimProcessor(),
             outputStructType=BLOCKED_SCHEMA,
             outputMode="Append",
             timeMode="None",
         )
-
-
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@contextmanager
-def rocksdb_state_store(spark) -> Iterator[None]:
-    """Scoped RocksDB provider override (transformWithState requires it).
-
-    ADVICE r09: a bare ``conf.set`` in the plan builder leaks the RocksDB
-    provider into every LATER streaming query on the session unless each
-    caller remembers to save/restore.  As a context manager the mutation
-    cannot outlive the block regardless of caller — exit restores the
-    previous value, or unsets if there was none."""
-    prev = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev)
 
 
 @contextmanager
@@ -554,7 +530,7 @@ def tws_timeout_flush(stream: DataFrame, gap_ms: int = 3_600_000) -> Iterator[Da
     Context manager: the provider conf is read at query START, so the
     override must span the caller's ``.start()``/await — run the query
     inside the ``with`` block; the conf is restored on exit."""
-    with rocksdb_state_store(stream.sparkSession):
+    with scoped_confs(stream.sparkSession, ROCKSDB_STATE):
         yield stream.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=TimeoutFlushProcessor(gap_ms),
             outputStructType=TIMEOUT_FLUSH_SCHEMA,
@@ -567,7 +543,7 @@ def tws_timeout_flush(stream: DataFrame, gap_ms: int = 3_600_000) -> Iterator[Da
 def tws_wordcount(tokens: DataFrame) -> Iterator[DataFrame]:
     """tokens(word) stream -> (word, running cnt) via
     transformWithStateInPandas.  Context manager — see tws_timeout_flush."""
-    with rocksdb_state_store(tokens.sparkSession):
+    with scoped_confs(tokens.sparkSession, ROCKSDB_STATE):
         yield tokens.groupBy("word").transformWithStateInPandas(
             statefulProcessor=RunningCountProcessor(),
             outputStructType=OUTPUT_SCHEMA,

@@ -16,6 +16,7 @@ Spark mappings (SURVEY §2.1 rows 3-8):
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +24,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.text import tokenize
+from ..session import scoped_confs
+
+#: Seconds ``drain`` waits for a query to process its available input before
+#: it stops the query: a Python worker that never connects back must fail
+#: one caller, not hang it until an outer kill.
+DRAIN_DEADLINE_S = 600
 
 
 def stream_dir_for(parquet_file: str) -> str:
@@ -48,11 +55,11 @@ def tokens_stream(sentences: DataFrame, rebalance: int | None = None) -> DataFra
     return tokenize(sentences, text_col="sentence", out_col="word")
 
 
-def running_counts(sentences: DataFrame, rebalance: int | None = None) -> DataFrame:
-    """Per-word running totals — state updates on every record, cumulative
-    since stream start, never windowed (StatefulWordCount.java:160-163)."""
-    return tokens_stream(sentences, rebalance).groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt")
+def sampled_counts(sentences: DataFrame) -> DataFrame:
+    """Per-word running count plus the newest ``sample_ts`` seen for the word
+    — the shape the latency sink reads (DummyLatencyCountingSink parity)."""
+    return tokens_stream(sentences).groupBy("word").agg(
+        F.count(F.lit(1)).alias("cnt"), F.max("sample_ts").alias("sample_ts")
     )
 
 
@@ -116,19 +123,45 @@ def run_to_completion(
     shuffle partitions to the stateful operator's real key cardinality.
     """
     spark = counts.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    override = shuffle_partitions and int(prev) > shuffle_partitions
-    if override:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
+    confs = {}
+    if shuffle_partitions and (
+        int(spark.conf.get("spark.sql.shuffle.partitions")) > shuffle_partitions
+    ):
+        confs = {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    with scoped_confs(spark, confs):
         q = start_to_memory(
             counts, name=name, output_mode=output_mode, checkpoint_dir=checkpoint_dir
         )
         try:
-            q.processAllAvailable()
+            drain(q)
             return spark.table(q.name)
         finally:
             q.stop()
+
+
+def drain(q: StreamingQuery) -> None:
+    """``q.processAllAvailable()`` with a deadline: a timer stops the query
+    after ``DRAIN_DEADLINE_S`` seconds, and then this raises TimeoutError
+    carrying the query's exception and last progress."""
+    expired = threading.Event()
+
+    def expire() -> None:
+        expired.set()
+        q.stop()
+
+    timer = threading.Timer(DRAIN_DEADLINE_S, expire)
+    timer.daemon = True
+    timer.start()
+    try:
+        q.processAllAvailable()
+    except Exception:
+        if not expired.is_set():
+            raise
     finally:
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        timer.cancel()
+    if expired.is_set():
+        raise TimeoutError(
+            f"streaming query {q.name!r} still had input after "
+            f"{DRAIN_DEADLINE_S} s; stopped it. exception: {q.exception()}; "
+            f"last progress: {q.lastProgress}"
+        )

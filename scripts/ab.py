@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import argparse
 import importlib.util
-import inspect
 import json
 import re
 import subprocess
@@ -41,13 +40,11 @@ from typing import Callable
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from bench import _cpu_totals, build_sf1, materialize  # noqa: E402
+from bench import SF01, _cpu_totals, build_sf1, materialize  # noqa: E402
 from flink_wordcount_spark.plans import QUERIES  # noqa: E402
 
 #: a run with at least this host steal share (%) was spoiled by the host
 QUIET_STEAL_PCT = 5.0
-#: the sf0.1 fixture, the one ``build_sf1`` replicates into sf1
-SF01 = inspect.signature(build_sf1).parameters["src_dir"].default
 
 _PLAN_NODES = {
     "SMJ": re.compile(r"\bSortMergeJoin\b"),

@@ -25,7 +25,6 @@ to LATENCY_SWEEP.json at the repo root for SCALE.md).
 from __future__ import annotations
 
 import json
-import os
 import subprocess
 import sys
 from pathlib import Path
@@ -33,7 +32,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-RUN_SEC = int(os.environ.get("SPARK_GRAFT_SWEEP_SEC", "45"))
+RUN_SEC = 45
 
 CONFIGS = [
     # lever 1: trigger interval around the r05 operating point (0.5 s).
@@ -62,27 +61,24 @@ CONFIGS = [
 
 def run_one(cfg: dict) -> dict:
     import bench
-    from flink_wordcount_spark.session import get_spark
+    from flink_wordcount_spark.session import ROCKSDB_STATE, get_spark, scoped_confs
 
     spark = get_spark(f"latency_sweep_{cfg['name']}")
     spark.sparkContext.setLogLevel("ERROR")
     extra = dict(cfg.get("extra", {}))
-    if cfg.get("provider") != "default":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            bench.ROCKSDB_PROVIDER,
-        )
+    provider = {} if cfg.get("provider") == "default" else ROCKSDB_STATE
     extra[
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     ] = "true" if cfg.get("changelog") else "false"
-    warm = bench.warm_jvm_for_latency(spark)
-    res = bench.bench_latency(
-        spark,
-        trigger_sec=cfg["trigger_sec"],
-        partitions=cfg["partitions"],
-        extra_confs=extra,
-        run_sec=RUN_SEC,
-    )
+    with scoped_confs(spark, provider):
+        warm = bench.warm_jvm_for_latency(spark)
+        res = bench.bench_latency(
+            spark,
+            trigger_sec=cfg["trigger_sec"],
+            partitions=cfg["partitions"],
+            extra_confs=extra,
+            run_sec=RUN_SEC,
+        )
     res["name"] = cfg["name"]
     res["jit_warmup"] = warm
     spark.stop()

@@ -25,15 +25,17 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from flink_wordcount_spark.session import get_spark  # noqa: E402
+from flink_wordcount_spark.session import (  # noqa: E402
+    LIVE_STATE,
+    ROCKSDB_STATE,
+    get_spark,
+)
 from flink_wordcount_spark.streaming.metrics import (  # noqa: E402
     LatencyRecorder,
     ThroughputListener,
 )
 from flink_wordcount_spark.streaming.sentences import rate_stream  # noqa: E402
-from flink_wordcount_spark.streaming.wordcount import tokens_stream  # noqa: E402
+from flink_wordcount_spark.streaming.wordcount import sampled_counts  # noqa: E402
 
 
 def build_query(spark, args, out_dir: Path, epoch: int, prev_latency=None):
@@ -46,10 +48,7 @@ def build_query(spark, args, out_dir: Path, epoch: int, prev_latency=None):
         sample_period=args.sample_period,
         skew_percent=args.skew_percent,
     )
-    toks = tokens_stream(sentences)
-    counts = toks.groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt"), F.max("sample_ts").alias("sample_ts")
-    )
+    counts = sampled_counts(sentences)
     latency = LatencyRecorder(str(out_dir / f"latency_{epoch}.csv"))
     if prev_latency is not None:
         # keep record-once semantics across the kill/recover boundary: keys
@@ -96,17 +95,7 @@ def main() -> int:
     spark = get_spark("streaming_wordcount_job")
     spark.sparkContext.setLogLevel("ERROR")
     if args.state_store == "rocksdb":
-        for k, v in {
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled": "true",
-            "spark.sql.streaming.stateStore.minDeltasForSnapshot": "150",
-            "spark.sql.streaming.stateStore.rocksdb."
-            "trackTotalNumberOfRows": "false",
-        }.items():
+        for k, v in {**ROCKSDB_STATE, **LIVE_STATE}.items():
             spark.conf.set(k, v)
     listener = ThroughputListener()
     spark.streams.addListener(listener)

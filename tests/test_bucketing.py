@@ -7,13 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from flink_wordcount_spark.session import scoped_confs
+
 
 @pytest.fixture()
 def no_broadcast(spark):
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        yield
 
 
 def _plan(df) -> str:

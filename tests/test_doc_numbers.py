@@ -70,3 +70,25 @@ def test_query_counts_match_catalog():
         len(rows_only),
     )
     assert sorted(re.findall(r"`(\w+)`", names)) == rows_only
+
+
+def test_state_store_confs_are_declared_once():
+    """Conf overrides go through ``session.scoped_confs``, and the RocksDB
+    state-store settings are declared only in ``session.py``: no other
+    module unsets a conf by hand or names the provider class.  perfbench/
+    keeps its own copy on purpose (it imports nothing from the repo's
+    tooling), and this guard names both strings itself."""
+    exempt = {
+        Path("flink_wordcount_spark/session.py"),
+        Path(__file__).resolve().relative_to(REPO_ROOT),
+    }
+    offenders = []
+    for path in sorted(REPO_ROOT.rglob("*.py")):
+        rel = path.relative_to(REPO_ROOT)
+        if rel.parts[0] == "perfbench" or rel.parts[0].startswith(".") or rel in exempt:
+            continue
+        text = path.read_text()
+        offenders += [
+            (str(rel), s) for s in ("conf.unset(", "RocksDBStateStoreProvider") if s in text
+        ]
+    assert not offenders, f"declare or scope these in session.py: {offenders}"

@@ -6,7 +6,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flink_wordcount_spark.plans import QUERIES
+from flink_wordcount_spark.session import scoped_confs
 from flink_wordcount_spark.streaming.wordcount import tokens_stream
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _plan(df) -> str:
@@ -78,15 +81,11 @@ def test_maybe_broadcast_gates_on_size(spark, sf_dir):
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     joined = lambda: o.join(maybe_broadcast(c), o["o_custkey"] == c["c_custkey"])  # noqa: E731
     assert "BroadcastHashJoin" in _plan(joined())
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
+    with scoped_confs(spark, {_THRESHOLD: "1b"}):
         gated = _plan(joined())
         assert "BroadcastHashJoin" not in gated
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, {_THRESHOLD: "-1"}):
         assert "BroadcastHashJoin" not in _plan(joined())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_maybe_broadcast_survives_on_derived_aggregate(spark, sf_dir):
@@ -222,17 +221,10 @@ def test_answers_stable_under_adverse_confs(spark, sf_dir):
             "sketch_cms_topk_bounds",
         )
     }
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.shuffle.partitions", "97")
+    with scoped_confs(spark, {_THRESHOLD: "-1", "spark.sql.shuffle.partitions": "97"}):
         for name, want in baseline.items():
             got = sorted(map(tuple, QUERIES[name](spark, sf_dir).collect()))
             assert got == want, name
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def test_r05_additions_plan_shapes(spark, sf_dir):
@@ -331,16 +323,12 @@ def test_funnel_has_no_unconditional_broadcast(spark, sf_dir):
     cached InMemoryRelation keeps the plan segment compiled under the conf
     of its FIRST build — an earlier default-threshold test would otherwise
     leak a fixture-scale broadcast into this shrunk-threshold check."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
+    with scoped_confs(spark, {_THRESHOLD: "1b"}):
         spark.catalog.clearCache()
         for q in ("curation_end_to_end", "dedup_edit_distance"):
             plan = _plan(QUERIES[q](spark, sf_dir))
             assert "BroadcastHashJoin" not in plan, q
             assert "BroadcastNestedLoopJoin" not in plan, q
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_late_r07_additions_plan_shapes(spark, sf_dir):
@@ -362,14 +350,10 @@ def test_late_r07_additions_plan_shapes(spark, sf_dir):
     sp = _plan(QUERIES["dedup_shared_spans"](spark, sf_dir))
     assert "CartesianProduct" not in sp
     assert "partial_count" in sp
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
+    with scoped_confs(spark, {_THRESHOLD: "1b"}):
         sp_big = _plan(QUERIES["dedup_shared_spans"](spark, sf_dir))
         assert "BroadcastHashJoin" not in sp_big
         assert "BroadcastNestedLoopJoin" not in sp_big
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     sk = _plan(QUERIES["qa_key_skew"](spark, sf_dir))
     assert "TakeOrderedAndProject" in sk
     assert "partial_count" in sk

@@ -12,6 +12,7 @@ import pyspark.sql.functions as F
 
 from flink_wordcount_spark.sources import register_sentence_source
 from flink_wordcount_spark.streaming.sentences import with_sentences
+from flink_wordcount_spark.streaming.wordcount import drain
 
 
 def _read(spark, n, size, seed, parts):
@@ -83,13 +84,19 @@ def test_datasource_stream_recovers_from_checkpoint(spark, tmp_path):
         return writer.start()
 
     q = start(one_batch=True)
-    q.awaitTermination()  # "kill" after a single 100-row batch
+    try:
+        finished = q.awaitTermination(120)  # "kill" after a single 100-row batch
+    finally:
+        q.stop()
+    assert finished is True, "the one-batch run did not finish"
     partial = spark.sql("SELECT CAST(sum(count) AS BIGINT) s FROM ds_recover").collect()
     assert partial[0].s and partial[0].s < 5000, "first run should be partial"
 
     q2 = start(one_batch=False)
-    q2.processAllAvailable()
-    q2.stop()
+    try:
+        drain(q2)
+    finally:
+        q2.stop()
 
     got = {
         r.word: r["count"]

@@ -13,6 +13,7 @@ from pyspark.sql import Window
 
 from flink_wordcount_spark.io import normalize_event_ts
 from flink_wordcount_spark.operators.text import word_counts
+from flink_wordcount_spark.session import ROCKSDB_STATE, scoped_confs
 from flink_wordcount_spark.streaming.metrics import LatencyRecorder, ThroughputListener
 from flink_wordcount_spark.streaming.sentences import batch_golden, rate_stream, wordlist
 from flink_wordcount_spark.streaming.stateful import emit_on_sample_counts
@@ -32,6 +33,35 @@ def test_file_replay_equals_batch(spark, sf_dir):
     )
     batch = word_counts(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     assert _counts_dict(streamed) == _counts_dict(batch)
+
+
+def test_drain_raises_when_a_batch_outlasts_the_deadline(spark, sf_dir, monkeypatch):
+    """A micro-batch stuck in a Python worker fails the drain within the
+    deadline (stopping the query) instead of hanging its caller."""
+    from flink_wordcount_spark.streaming import wordcount
+
+    monkeypatch.setattr(wordcount, "DRAIN_DEADLINE_S", 2)
+
+    @F.udf("string")
+    def stuck(text):
+        time.sleep(60)
+        return text
+
+    docs = f"{sf_dir}/documents.parquet"
+    stream = spark.readStream.schema(spark.read.parquet(docs).schema).parquet(
+        wordcount.stream_dir_for(docs)
+    )
+    q = wordcount.start_to_memory(
+        stream.select(stuck("text").alias("text")), output_mode="append"
+    )
+    t0 = time.time()
+    try:
+        with pytest.raises(TimeoutError, match="last progress"):
+            wordcount.drain(q)
+    finally:
+        q.stop()
+    assert time.time() - t0 < 45
+    assert not q.isActive
 
 
 def test_generator_is_deterministic(spark):
@@ -61,52 +91,47 @@ def test_checkpoint_recovery(spark, sf_dir, tmp_path, provider):
     the same checkpoint, final counts equal an uninterrupted run — under
     both the default (HDFS-backed memory) and RocksDB state stores (the
     representative provider at the 355k-word vocabulary's state size)."""
-    if provider == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    confs = ROCKSDB_STATE if provider == "rocksdb" else {}
+    with scoped_confs(spark, confs):
+        src_dir = tmp_path / "src"
+        ckpt = str(tmp_path / "ckpt")
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs.repartition(4).write.parquet(str(src_dir))
+
+        counts = file_replay_wordcount(spark, str(src_dir), max_files_per_trigger=1)
+        name1 = f"rec_{uuid.uuid4().hex[:8]}"
+        q = (
+            counts.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name1)
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-    src_dir = tmp_path / "src"
-    ckpt = str(tmp_path / "ckpt")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.repartition(4).write.parquet(str(src_dir))
+        # let at least one (but not all) micro-batch commit, then "kill the worker"
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            if q.lastProgress and q.lastProgress["numInputRows"] > 0:
+                break
+            time.sleep(0.2)
+        q.stop()
+        q.awaitTermination(30)
 
-    counts = file_replay_wordcount(spark, str(src_dir), max_files_per_trigger=1)
-    name1 = f"rec_{uuid.uuid4().hex[:8]}"
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name1)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    # let at least one (but not all) micro-batch commit, then "kill the worker"
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        if q.lastProgress and q.lastProgress["numInputRows"] > 0:
-            break
-        time.sleep(0.2)
-    q.stop()
-    q.awaitTermination(30)
-
-    # restart from the same checkpoint: source replay position is restored
-    # (reference analog: RateControlledSourceFunction.restoreState :113-123)
-    counts2 = file_replay_wordcount(spark, str(src_dir), max_files_per_trigger=1)
-    name2 = f"rec_{uuid.uuid4().hex[:8]}"
-    q2 = (
-        counts2.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name2)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q2.processAllAvailable()
-    q2.stop()
+        # restart from the same checkpoint: source replay position is restored
+        # (reference analog: RateControlledSourceFunction.restoreState :113-123)
+        counts2 = file_replay_wordcount(spark, str(src_dir), max_files_per_trigger=1)
+        name2 = f"rec_{uuid.uuid4().hex[:8]}"
+        q2 = (
+            counts2.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name2)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q2.processAllAvailable()
+        q2.stop()
 
     final = _counts_dict(spark.table(name2))
     golden = _counts_dict(word_counts(docs))
-    if provider == "rocksdb":
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     assert final == golden
 
 
