@@ -29,6 +29,7 @@ from flink_wordcount_spark.session import (  # noqa: E402
     get_spark,
     scoped_confs,
 )
+from perfbench import probes  # noqa: E402
 
 #: Headline set: the scale-critical shapes (fact-table aggs, multi-join,
 #: window, near-dedup, ANN, streaming, Arrow UDF path).
@@ -85,6 +86,12 @@ SF01 = "/root/testdata/sf0.1"
 def materialize(df) -> None:
     """Execute the full plan without driver-side transfer (noop batch sink)."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def pick(sorted_vals: list, q: float):
+    """The sample at fraction ``q`` of an ascending list: index
+    ``min(n - 1, int(q * n))``, so ``q=0.5`` is the upper median."""
+    return sorted_vals[min(len(sorted_vals) - 1, int(q * len(sorted_vals)))]
 
 
 def degenerate_window(lat: dict) -> bool:
@@ -490,7 +497,7 @@ def bench_streaming_throughput(spark) -> dict:
         _unload_state_stores(spark)
     dt_attempts = sorted(d for _, d in attempts)
     total_words, dt = min(attempts, key=lambda a: a[1])
-    dt_median = dt_attempts[len(dt_attempts) // 2]
+    dt_median = pick(dt_attempts, 0.5)
     # HDFS-backed memory store (Flink analog)
     _, dt_default = one_run(dict.fromkeys(rocksdb))
     return {
@@ -656,6 +663,7 @@ def bench_recovery(spark, golden_path: str) -> dict:
 
     from flink_wordcount_spark.operators.text import tokenize
     from flink_wordcount_spark.streaming.wordcount import (
+        drain,
         file_replay_wordcount,
         start_to_memory,
     )
@@ -692,7 +700,7 @@ def bench_recovery(spark, golden_path: str) -> dict:
                 break
             time.sleep(0.05)
         restart_to_first_commit = time.time() - t0
-        q.processAllAvailable()
+        drain(q)
         total = spark.table(name).agg(F.sum("cnt")).collect()[0][0]
         q.stop()
         q.awaitTermination(30)
@@ -878,7 +886,7 @@ def bench_latency(
         if execs:
             cfg["batches"] = {
                 "n": len(execs),
-                "trigger_exec_ms_p50": execs[len(execs) // 2],
+                "trigger_exec_ms_p50": pick(execs, 0.5),
                 "trigger_exec_ms_max": execs[-1],
                 "last5": progress[-5:],
             }
@@ -891,11 +899,9 @@ def bench_latency(
                 if p.get("stateCommit_ms") is not None
             )
             if commits:
-                p50c = commits[len(commits) // 2]
+                p50c = pick(commits, 0.5)
                 cfg["batches"]["state_commit_ms_p50"] = p50c
-                cfg["batches"]["state_commit_ms_p99"] = commits[
-                    min(len(commits) - 1, int(len(commits) * 0.99))
-                ]
+                cfg["batches"]["state_commit_ms_p99"] = pick(commits, 0.99)
                 # un-truncated: io_stall_window's all() classification must
                 # see EVERY spike — a dropped flush-dominated spike behind a
                 # fileSync prefix would let an engine spike be excused as
@@ -914,7 +920,7 @@ def bench_latency(
                 if p.get("fileSync_ms") is not None
             )
             if syncs:
-                cfg["batches"]["fileSync_ms_p50"] = syncs[len(syncs) // 2]
+                cfg["batches"]["fileSync_ms_p50"] = pick(syncs, 0.5)
             # Live-path capacity evidence (margin over the arrival rate):
             # rows drained per second of batch execution. For saturated
             # batches this IS the capacity; for drained sub-trigger batches
@@ -925,28 +931,20 @@ def bench_latency(
                 if p["triggerExecution_ms"]
             )
             if rates:
-                cfg["batches"]["rows_per_exec_sec_p50"] = round(
-                    rates[len(rates) // 2]
-                )
+                cfg["batches"]["rows_per_exec_sec_p50"] = round(pick(rates, 0.5))
     if not lat:
         return {"n_samples": 0, "config": cfg}
 
-    def pct(p: float) -> int:
-        return lat[min(len(lat) - 1, int(p * len(lat)))]
-
-    def fpct(vals: list, p: float) -> int:
-        return vals[min(len(vals) - 1, int(p * len(vals)))]
-
     return {
         "n_samples": len(lat),
-        "p50": pct(0.50),
-        "p95": pct(0.95),
-        "p99": pct(0.99),
+        "p50": pick(lat, 0.50),
+        "p95": pick(lat, 0.95),
+        "p99": pick(lat, 0.99),
         "max": lat[-1],
         "full_window": {
             "n_samples": len(all_lat),
-            "p50": fpct(all_lat, 0.50),
-            "p95": fpct(all_lat, 0.95),
+            "p50": pick(all_lat, 0.50),
+            "p95": pick(all_lat, 0.95),
         },
         "config": cfg,
     }
@@ -1352,8 +1350,8 @@ def _window_ledger_update(
         # window-sampled context.
         "sf1_warm_ratio": sf1_warm_ratios,
         "queries": queries,
-        # r16: hypervisor steal share over this window's own duration
-        # (/proc/stat delta) — audit context only; pool filtering unchanged
+        # r16: hypervisor steal share over this window's own duration —
+        # audit context only; pool filtering unchanged
         "steal_pct": steal_pct,
     }
     ledger = root / "BENCH_WINDOWS.jsonl"
@@ -1442,37 +1440,18 @@ def pool_windows(pool: list[dict]) -> dict:
     return out
 
 
-def _loadavg1() -> float:
-    try:
-        return os.getloadavg()[0]
-    except OSError:
-        return -1.0
-
-
-def _cpu_totals() -> tuple[int, int]:
-    """(total_jiffies, steal_jiffies) from /proc/stat — r16: this host has
-    bursty hypervisor CPU steal (minutes-long 5-20% storms) that loadavg
-    cannot see; windows record the steal share over their own duration so
-    a storm-contaminated window is auditable in the ledger."""
-    try:
-        vals = [int(x) for x in Path("/proc/stat").read_text().splitlines()[0].split()[1:]]
-        return sum(vals), vals[7] if len(vals) > 7 else 0
-    except Exception:
-        return 0, 0
-
-
 def wait_for_quiet_machine(max_wait_sec: int = 120, threshold: float = 2.0) -> dict:
     """A contended sandbox uniformly inflates every timing (BENCH_r03 shipped
     ~3x-inflated numbers that read as a code regression). Wait for the 1-min
     load average to drop below ``threshold`` (bounded), and record the load
     context so the artifact is auditable either way."""
-    start_load = _loadavg1()
+    start_load = probes.loadavg1()
     waited = 0.0
     load = start_load
     while load > threshold and waited < max_wait_sec:
         time.sleep(5)
         waited += 5
-        load = _loadavg1()
+        load = probes.loadavg1()
     return {
         "load_at_invoke": round(start_load, 2),
         "load_at_start": round(load, 2),
@@ -1555,7 +1534,9 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF01)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     machine = wait_for_quiet_machine()
-    _tot0, _st0 = _cpu_totals()
+    # bursty hypervisor steal (minutes-long 5-20 % storms) that loadavg
+    # cannot see: each window records its own steal share for audit
+    host0 = probes.cpu_times()
     # Streaming FIRST, in its own JVM, before the batch parent JVM exists:
     # even a stopped parent SparkSession keeps its py4j JVM (and heap)
     # resident in this process, and a resident 100 GB-heap JVM costs the
@@ -1580,9 +1561,8 @@ def main() -> int:
     timings = {n: min(timings[n], second[n]) for n in timings}
 
     sf1 = bench_sf1(spark)
-    machine["load_at_end"] = round(_loadavg1(), 2)
-    _tot1, _st1 = _cpu_totals()
-    machine["steal_pct"] = round(100.0 * (_st1 - _st0) / max(1, _tot1 - _tot0), 2)
+    machine["load_at_end"] = round(probes.loadavg1(), 2)
+    machine["steal_pct"] = round(probes.steal_pct(host0, probes.cpu_times()), 2)
     total = round(sum(timings.values()), 3)
     # Median-of-windows headline (see _window_ledger_update): `value` is
     # the median suite time across this round's bench runs; this run's own

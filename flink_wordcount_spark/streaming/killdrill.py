@@ -59,6 +59,7 @@ ckpt = os.path.join({tmp!r}, "ckpt")
  .write.mode("overwrite").parquet(data_dir))
 
 from flink_wordcount_spark.operators.text import tokenize
+from flink_wordcount_spark.streaming.wordcount import drain
 schema = spark.read.parquet(data_dir).schema
 stream = (spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "2").parquet(data_dir))
@@ -96,7 +97,7 @@ while time.time() < deadline:
 t_rec = time.time() - t_kill
 assert recovered_batch is not None, "no batch committed after the kill"
 
-q.processAllAvailable()
+drain(q)
 streamed = {{r["word"]: r["cnt"] for r in spark.table("killtest").collect()}}
 q.stop()
 batch = {{r["word"]: r["cnt"]

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Interleaved A/B of query builders: equal results, quiet minimums, plans.
+"""Interleaved A/B of query builders: equal results, quiet minimums, plans
+and stages.
 
 Usage: python scripts/ab.py ARM [ARM ...] [--sf1] [--passes N] [--out FILE]
 
@@ -13,13 +14,16 @@ Method, per scale (sf0.1, plus ``bench.build_sf1``'s synthetic sf1 with
 ``--sf1``):
 
 - one untimed warm pass per arm collects its rows; every arm's sorted rows
-  must equal the first arm's (``equal``), and the executed plan of that pass
-  gives the join and exchange counts;
+  must equal the first arm's (``equal``), and AQE's final plan of that pass
+  gives the ``plan.*`` join and exchange counts;
 - ``--passes`` timed passes reverse the arm order on every other pass; each
   run clears the cache untimed, then builds the DataFrame and materializes it
-  into the noop sink, with the host steal share read around it;
+  into the noop sink under its own job group, with the host steal share read
+  around it; after the timed wall, untimed, the run's stages are read from
+  Spark's status store;
 - ``min`` is over all runs, ``quiet_min`` over runs whose steal share is
-  below ``QUIET_STEAL_PCT``.
+  below ``QUIET_STEAL_PCT``, and ``exec`` holds the median over runs of each
+  ``exec.*`` stage metric (as ``perfbench/run.py --trace 1`` names them).
 
 The ledger is printed (and written to ``--out``).  If any scale's results
 differ, the timed passes are skipped and the exit status is 1.
@@ -30,7 +34,6 @@ from __future__ import annotations
 import argparse
 import importlib.util
 import json
-import re
 import subprocess
 import sys
 import time
@@ -40,19 +43,12 @@ from typing import Callable
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from bench import SF01, _cpu_totals, build_sf1, materialize  # noqa: E402
+from bench import SF01, build_sf1, materialize  # noqa: E402
 from flink_wordcount_spark.plans import QUERIES  # noqa: E402
+from perfbench import probes  # noqa: E402
 
 #: a run with at least this host steal share (%) was spoiled by the host
 QUIET_STEAL_PCT = 5.0
-
-_PLAN_NODES = {
-    "SMJ": re.compile(r"\bSortMergeJoin\b"),
-    "BHJ": re.compile(r"\bBroadcastHashJoin\b"),
-    "SHJ": re.compile(r"\bShuffledHashJoin\b"),
-    # a shuffle; BroadcastExchange and ReusedExchange do not match
-    "Exchange": re.compile(r"\bExchange\b"),
-}
 
 
 def resolve(arm: str) -> Callable:
@@ -79,27 +75,35 @@ def _commit() -> str | None:
 
 
 def _warm(spark, build: Callable, sf_dir: str) -> tuple[list, dict]:
-    """Sorted result rows, and their count with the executed plan's
+    """Sorted result rows, and their count with the final plan's
     join/exchange counts."""
     spark.catalog.clearCache()
     df = build(spark, sf_dir)
     rows = sorted(map(tuple, df.collect()), key=repr)
-    # after an action AQE prints its final plan above the initial one
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==", 1)[0]
-    counts = {k: len(rx.findall(final)) for k, rx in _PLAN_NODES.items()}
+    counts = probes.final_plan_counts(df._jdf.queryExecution().executedPlan().toString())
     return rows, {**counts, "rows": len(rows)}
 
 
-def _timed(spark, build: Callable, sf_dir: str) -> tuple[float, float]:
-    """Wall seconds and host steal share (%) of one build + materialize."""
+def _timed(
+    spark, build: Callable, sf_dir: str, reader: probes.StatusReader, group: str
+) -> tuple[float, float, dict]:
+    """Wall seconds, host steal share (%) and ``exec.*`` stage metrics of one
+    build + materialize run under job group ``group``."""
     spark.catalog.clearCache()
-    tot0, steal0 = _cpu_totals()
-    t0 = time.perf_counter()
-    materialize(build(spark, sf_dir))
-    wall = time.perf_counter() - t0
-    tot1, steal1 = _cpu_totals()
-    return round(wall, 3), round(100.0 * (steal1 - steal0) / max(1, tot1 - tot0), 2)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        host0 = probes.cpu_times()
+        t0 = time.perf_counter()
+        materialize(build(spark, sf_dir))
+        wall = time.perf_counter() - t0
+        steal = probes.steal_pct(host0, probes.cpu_times())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    reader.drain()
+    stats = reader.exec_stats(reader.jobs(group))
+    metrics = probes.exec_metrics(stats, reader, sc.defaultParallelism)
+    return round(wall, 3), round(steal, 2), metrics
 
 
 def run(spark, arms: list[str], sf1: bool, passes: int, sf_dir: str = SF01) -> dict:
@@ -129,25 +133,30 @@ def run(spark, arms: list[str], sf1: bool, passes: int, sf_dir: str = SF01) -> d
         ledger["results"] = plans
         return ledger
 
+    reader = probes.StatusReader(spark)
     runs = {arm: {tag: [] for tag in scales} for arm in arms}
     for p in range(passes):
         order = arms if p % 2 == 0 else arms[::-1]
         ledger["order"].append(order)
         for tag, d in scales.items():
             for arm in order:
-                runs[arm][tag].append(_timed(spark, builders[arm], d))
+                group = f"ab:{p}:{tag}:{arm}"
+                runs[arm][tag].append(_timed(spark, builders[arm], d, reader, group))
     for arm in arms:
         res = ledger["results"][arm]
         for tag in scales:
-            walls = [w for w, _ in runs[arm][tag]]
-            quiet = [w for w, s in runs[arm][tag] if s < QUIET_STEAL_PCT]
+            walls = [w for w, _, _ in runs[arm][tag]]
+            quiet = [w for w, s, _ in runs[arm][tag] if s < QUIET_STEAL_PCT]
+            execs = [e for _, _, e in runs[arm][tag]]
+            keys = execs[0] if execs else ()
             res[tag] = {
                 "all": walls,
-                "steal_pct": [s for _, s in runs[arm][tag]],
+                "steal_pct": [s for _, s, _ in runs[arm][tag]],
                 "min": min(walls, default=None),
                 "quiet_min": min(quiet, default=None),
                 "n_quiet": len(quiet),
                 **plans[arm][tag],
+                "exec": {k: probes.median(e[k] for e in execs) for k in keys},
             }
         if sf1:
             q0, q1 = res[base]["quiet_min"], res["sf1"]["quiet_min"]

@@ -1,5 +1,5 @@
 """scripts/ab.py: arms resolve, results are compared, order alternates, and
-the ledger carries every field."""
+the ledger carries every field, stage metrics included."""
 
 from __future__ import annotations
 
@@ -17,6 +17,12 @@ ab = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(ab)
 
 QUERY = "q3_shipping_priority"
+PLAN_KEYS = (
+    "plan.broadcast_joins",
+    "plan.sort_merge_joins",
+    "plan.shuffled_hash_joins",
+    "plan.exchanges",
+)
 
 ARMS_PY = f"""
 from flink_wordcount_spark.plans import QUERIES
@@ -63,12 +69,14 @@ def test_equal_arms_alternate_and_carry_every_field(spark, sf_dir, arms_file):
         assert 0 <= res["n_quiet"] <= 2
         if res["n_quiet"]:
             assert res["quiet_min"] >= res["min"]
-        for k in ("SMJ", "BHJ", "SHJ", "Exchange"):
+        for k in PLAN_KEYS:
             assert isinstance(res[k], int)
+        assert res["exec"]["exec.stages"] >= 1
         assert "warm_ratio_quiet" not in ledger["results"][arm]
     q, same = (ledger["results"][a][tag] for a in arms)
     assert q["rows"] == same["rows"] > 1
-    assert same["Exchange"] == q["Exchange"] + 1  # the repartition
+    assert same["plan.exchanges"] == q["plan.exchanges"] + 1  # the repartition
+    assert same["exec"]["exec.shuffle_write_bytes"] > q["exec"]["exec.shuffle_write_bytes"]
 
 
 def test_different_result_is_not_equal(spark, sf_dir, arms_file):

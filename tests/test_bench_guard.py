@@ -264,6 +264,19 @@ def test_median_helper():
     assert _median([]) is None
 
 
+def test_pick_takes_index_q_times_n():
+    """Every published bench percentile is the sample at index
+    ``min(n - 1, int(q * n))`` of the sorted list (p50 = the upper median)."""
+    from bench import pick
+
+    for n, q, index in [
+        (1, 0.5, 0), (1, 0.99, 0),
+        (2, 0.5, 1), (2, 0.99, 1),
+        (100, 0.5, 50), (100, 0.99, 99),
+    ]:
+        assert pick(list(range(n)), q) == index
+
+
 def test_window_ledger_median_is_round_scoped(tmp_path):
     """The ledger tags entries by round (1 + latest BENCH_r*.json) so a new
     round starts a fresh window pool without any cleanup step."""

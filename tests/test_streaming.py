@@ -18,6 +18,7 @@ from flink_wordcount_spark.streaming.metrics import LatencyRecorder, ThroughputL
 from flink_wordcount_spark.streaming.sentences import batch_golden, rate_stream, wordlist
 from flink_wordcount_spark.streaming.stateful import emit_on_sample_counts
 from flink_wordcount_spark.streaming.wordcount import (
+    drain,
     file_replay_wordcount,
     run_to_completion,
 )
@@ -127,7 +128,7 @@ def test_checkpoint_recovery(spark, sf_dir, tmp_path, provider):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        q2.processAllAvailable()
+        drain(q2)
         q2.stop()
 
     final = _counts_dict(spark.table(name2))
@@ -183,7 +184,7 @@ def test_metrics_capture(spark, tmp_path):
         lat_csv = str(tmp_path / "latency.csv")
         rec = LatencyRecorder(lat_csv)
         q = stream.writeStream.outputMode("append").foreachBatch(rec).start()
-        q.processAllAvailable()
+        drain(q)
         q.stop()
         q.awaitTermination(30)
 
@@ -268,7 +269,7 @@ def test_idempotent_sink_exactly_once(spark, tmp_path):
     sink = IdempotentParquetSink(str(tmp_path / "out"))
     stream = spark.readStream.schema(sent.schema).parquet(src)
     q = stream.writeStream.outputMode("append").foreachBatch(sink).start()
-    q.processAllAvailable()
+    drain(q)
     q.stop()
     q.awaitTermination(30)
 
@@ -306,7 +307,7 @@ def test_streaming_session_window_subset_of_batch(spark, sf_dir):
     name = f"sess_{uuid.uuid4().hex[:8]}"
     q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
     try:
-        q.processAllAvailable()
+        drain(q)
         streamed = {(r.user_id, r.session_start): r.n_events for r in spark.table(name).collect()}
     finally:
         q.stop()
@@ -397,7 +398,7 @@ def test_streaming_upsert_sink_maintains_keyed_table(spark, tmp_path):
         .foreachBatch(sink2)
         .start()
     )
-    q.processAllAvailable()
+    drain(q)
     q.stop()
     q.awaitTermination(30)
     got = {(r.k, r.v) for r in sink2.read(spark).collect()}

@@ -10,6 +10,8 @@ import uuid
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
+from flink_wordcount_spark.streaming.wordcount import drain
+
 SCHEMA = StructType(
     [StructField("ts", TimestampType()), StructField("k", StringType())]
 )
@@ -55,7 +57,7 @@ def test_late_rows_dropped_from_windowed_agg(spark, tmp_path):
     name = f"wm_{uuid.uuid4().hex[:8]}"
     q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
     try:
-        q.processAllAvailable()
+        drain(q)
         rows = [(r.w, r.n) for r in spark.table(name).collect()]
         dropped = sum(
             p["stateOperators"][0]["numRowsDroppedByWatermark"]
@@ -84,7 +86,7 @@ def test_dropduplicates_with_watermark(spark, tmp_path):
     name = f"dd_{uuid.uuid4().hex[:8]}"
     q = dedup.writeStream.outputMode("append").format("memory").queryName(name).start()
     try:
-        q.processAllAvailable()
+        drain(q)
         ks = [r.k for r in spark.table(name).collect()]
     finally:
         q.stop()
