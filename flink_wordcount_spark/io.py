@@ -1,13 +1,16 @@
 """Table IO over the driver fixtures.
 
-All reads go through ``table()`` so every query gets: UTC session timezone
-(oracle parity), parquet scans with Catalyst pushdown/pruning, and a single
-place to swap in bucketed/partitioned layouts at cluster scale.
+All batch reads go through ``table()`` and all file-replay streams through
+its stream twin ``replay()``, so every query gets: UTC session timezone
+(oracle parity), parquet scans with Catalyst pushdown/pruning, one
+``events.ts`` type across fixture vintages, and a single place to swap in
+bucketed/partitioned layouts at cluster scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import tune
 
@@ -29,8 +32,17 @@ TABLES = (
 # new object, which would then serve stale plans — and a weak-keyed dict won't
 # work either, because cached DataFrames strongly reference their session).
 # Bounded: only the most recent few applications' caches are retained.
-_CACHE: dict[str, dict[tuple[str, str], DataFrame]] = {}
+_CACHE: dict[str, dict[tuple[str, str], DataFrame | StructType]] = {}
 _CACHE_MAX_APPS = 4
+
+
+def _app_cache(spark: SparkSession) -> dict[tuple[str, str], DataFrame | StructType]:
+    """This application's memo, evicting the oldest other applications'."""
+    app_id = spark.sparkContext.applicationId
+    per_session = _CACHE.setdefault(app_id, {})
+    while len(_CACHE) > _CACHE_MAX_APPS:
+        _CACHE.pop(next(iter(k for k in _CACHE if k != app_id)))
+    return per_session
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -42,16 +54,17 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     ``timestamp_ntz``. Both become session-tz (UTC) micros timestamps, so
     every downstream window/watermark/oracle comparison is vintage-agnostic.
     Nanos use integer ``div``, not float math: 2024 epoch-nanos (~1.7e18)
-    exceed double's 2^53 exact-integer range.
+    exceed double's 2^53 exact-integer range. A frame without a ``ts``
+    column is returned unchanged, so every fixture read can apply this.
     """
     from pyspark.sql import functions as F
 
     dt = dict(df.dtypes).get("ts")
+    if dt in (None, "timestamp"):
+        return df
     if dt == "bigint":
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dt != "timestamp":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -67,24 +80,71 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    app_id = spark.sparkContext.applicationId
-    per_session = _CACHE.setdefault(app_id, {})
-    while len(_CACHE) > _CACHE_MAX_APPS:  # evict oldest app's plans
-        _CACHE.pop(next(iter(k for k in _CACHE if k != app_id)))
+    per_session = _app_cache(spark)
     key = (sf_dir, name)
     cached = per_session.get(key)
     if cached is not None:
         return cached
     tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = normalize_event_ts(df)
+    df = normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     per_session[key] = df
     return df
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [table(spark, sf_dir, n) for n in names]
+
+
+def raw_schema(spark: SparkSession, path: str) -> StructType:
+    """On-disk schema of a parquet file or directory, read on a tuned session.
+
+    The session is tuned first: on an untuned one a nanos-vintage fixture
+    throws at the footer read (no ``nanosAsLong``), and a non-UTC session
+    timezone shifts every window boundary against the oracle. The schema is
+    memoized per (application, path) for the reason ``table`` memoizes its
+    plans: the read costs a file listing plus a footer read.
+    """
+    tune(spark)
+    per_session = _app_cache(spark)
+    key = ("schema", path)
+    schema = per_session.get(key)
+    if schema is None:
+        schema = per_session[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def _stream_dir(parquet_file: str) -> str:
+    """Stage a single parquet file as a streamable directory (the file
+    source requires a directory); symlinks keep this zero-copy."""
+    import hashlib
+    import os
+    import tempfile
+
+    key = hashlib.sha1(parquet_file.encode()).hexdigest()[:12]
+    d = os.path.join(tempfile.gettempdir(), f"fws_streamdir_{key}")
+    os.makedirs(d, exist_ok=True)
+    link = os.path.join(d, "part-00000.parquet")
+    if not os.path.exists(link):
+        os.symlink(parquet_file, link)
+    return d
+
+
+def replay(
+    spark: SparkSession, path: str, files_per_trigger: int | None = None
+) -> DataFrame:
+    """File-replay stream of a parquet file or directory: the stream twin of
+    ``table()``, replaying the rows as if they arrived from a live source.
+
+    A single ``.parquet`` file is staged as a one-file directory. The reader
+    takes the memoized on-disk schema (a file source cannot infer one), and
+    ``files_per_trigger`` caps the files per micro-batch when given. ``ts``
+    is normalized exactly as a batch read normalizes it.
+    """
+    reader = spark.readStream.schema(raw_schema(spark, path))
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    src = _stream_dir(path) if path.endswith(".parquet") else path
+    return normalize_event_ts(reader.parquet(src))
 
 
 def write_compacted(

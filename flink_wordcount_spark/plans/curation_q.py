@@ -297,7 +297,7 @@ WITH RECURSIVE keep1 AS (
     WHERE NOT EXISTS (SELECT 1 FROM assign a
                       WHERE a.doc_id = d.doc_id AND a.rep_id <> d.doc_id)
 ), toks4 AS (
-    SELECT doc_id, list_filter(regexp_split_to_array(text, '\\W+'), x -> length(x) > 0) AS t
+    SELECT doc_id, {_TOKS_SQL} AS t
     FROM documents
 ), gr4 AS (
     SELECT DISTINCT doc_id, array_to_string(t[i:i+{_E2E_DECON_N - 1}], ' ') AS s

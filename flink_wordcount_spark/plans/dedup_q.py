@@ -28,7 +28,7 @@ from ..operators.dedup import (
     shingles,
     simhash,
 )
-from ..operators.text import JACCARD_SCORE_SQL, shingle_pair_cte_sql
+from ..operators.text import JACCARD_SCORE_SQL, TOKS_SQL, shingle_pair_cte_sql
 from .catalog import query
 
 _SHINGLE_N = 3
@@ -237,7 +237,7 @@ _NEW_SHARD_MOD, _NEW_SHARD_RES = 5, 4
     "dedup_incremental_shard",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, list_filter(regexp_split_to_array(text, '\\W+'), x -> length(x) > 0) AS t
+        SELECT doc_id, {TOKS_SQL} AS t
         FROM documents
     ), sh AS (
         SELECT DISTINCT doc_id, array_to_string(t[i:i+{_SHINGLE_N - 1}], ' ') AS s
@@ -311,7 +311,12 @@ def _md5_h60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _minhash_md5_oracle() -> str:
+def _md5_band_ctes() -> str:
+    """The md5 MinHash banding CTE chain, ending at ``bands``: tokenize ->
+    distinct shingles (toks, sh) -> md5 60-bit hash (hm) -> 32 affine
+    permutations mod 2^31-1, per-doc mins (sig) -> 8 band keys of 4 mins
+    each (bands).  Shared by the batch candidate oracle below and the
+    streaming dedup oracles, which append their own CTEs or SELECT."""
     r = _MD5_K // _MD5_BANDS
     mins = ",\n               ".join(
         f"min(({a} * hm + {b}) % {_P31}) AS m{i}"
@@ -325,7 +330,7 @@ def _minhash_md5_oracle() -> str:
     band_vals = ", ".join(f"({bi})" for bi in range(_MD5_BANDS))
     return f"""
     WITH toks AS (
-        SELECT doc_id, list_filter(regexp_split_to_array(text, '\\W+'), x -> length(x) > 0) AS t
+        SELECT doc_id, {TOKS_SQL} AS t
         FROM documents
     ), sh AS (
         SELECT DISTINCT doc_id, array_to_string(t[i:i+{_SHINGLE_N - 1}], ' ') AS s
@@ -343,11 +348,18 @@ def _minhash_md5_oracle() -> str:
                  {band_cases}
                END AS band_key
         FROM sig CROSS JOIN (VALUES {band_vals}) AS bb(band_idx)
-    )
+    )"""
+
+
+def _minhash_md5_oracle() -> str:
+    return (
+        _md5_band_ctes()
+        + """
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM bands a JOIN bands b USING (band_idx, band_key)
     WHERE a.doc_id < b.doc_id
     """
+    )
 
 
 @query("lsh_minhash_candidates_md5", oracle=_minhash_md5_oracle())
@@ -425,7 +437,7 @@ def _simhash_md5_oracle() -> str:
     )
     return f"""
     WITH toks AS (
-        SELECT doc_id, list_filter(regexp_split_to_array(text, '\\W+'), x -> length(x) > 0) AS t
+        SELECT doc_id, {TOKS_SQL} AS t
         FROM documents
     ), tok AS (
         SELECT doc_id,
@@ -707,9 +719,7 @@ _SPAN_W = 8
 #: xxhash64 span collision (~1e-9 at sf0.1).
 _SHARED_SPANS_ORACLE = f"""
     WITH toks AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(text, '\\W+'),
-                           x -> length(x) > 0) AS t
+        SELECT doc_id, {TOKS_SQL} AS t
         FROM documents
     ), sp AS (
         SELECT DISTINCT doc_id, array_to_string(t[i:i+{_SPAN_W - 1}], ' ') AS s

@@ -1,16 +1,13 @@
 """Driver-facing streaming queries — each runs a REAL Structured Streaming
 query (micro-batch engine + state store) synchronously and returns the final
 result table, which makes the streaming surface oracle-checkable via batch
-equivalence (SURVEY §5.2.3):
+equivalence (SURVEY §5.2.3).
 
-- ``stream_wordcount_file``: the reference pipeline with deterministic file
-  replay standing in for the live source; complete-mode counts == batch SQL.
-- ``stream_wordcount_stateful``: same counts produced by the stateful API
-  (applyInPandasWithState running totals) — the CountWords parity path.
-- ``stream_events_tumbling``: event-time tumbling window aggregation on the
-  events stream; equals the batch window query.
-- ``stream_sentences_golden``: the seeded rate-source generator (sentences.py)
-  replayed deterministically; engine-specific hashes -> rows-only.
+Every file-replayed stream comes from ``io.replay``, the stream twin of
+``io.table``: the same tuned session, memoized footer schema and
+``events.ts`` normalization as a batch read. Queries whose emission waits on
+the watermark replay ``_left_join_stream_dir`` (events plus two far-future
+sentinel files) one file per trigger, so the watermark passes the data.
 """
 
 from __future__ import annotations
@@ -22,41 +19,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import maybe_broadcast
-from ..io import normalize_event_ts, table
+from ..io import raw_schema, replay, table
 from ..operators.text import tokenize
 from ..streaming.sentences import batch_golden
 from ..streaming.stateful import final_state_counts
-from ..streaming.wordcount import file_replay_wordcount, run_to_completion, stream_dir_for
+from ..streaming.wordcount import file_replay_wordcount, run_to_completion
 from .catalog import query
-
-
-def _raw_schema(spark, path: str):
-    """On-disk schema for a readStream source, with the session tuned FIRST.
-
-    r08 review: every streaming query did a bare ``spark.read.parquet``
-    schema grab, so correctness silently depended on some batch query having
-    already routed through ``io.table()`` -> ``tune()`` — on an un-tuned
-    session a nanos-vintage fixture throws at the footer read (no
-    ``nanosAsLong``) and a non-UTC host shifts every window boundary against
-    the oracle.  ``tune()`` is idempotent and cached per session, and the
-    schema read is memoized here for the same reason ``io.table`` memoizes
-    its plans (it costs a file listing + footer read per call).
-    """
-    from ..session import tune
-
-    tune(spark)
-    app_id = spark.sparkContext.applicationId
-    cached = _SCHEMA_CACHE.get((app_id, path))
-    if cached is None:
-        cached = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[(app_id, path)] = cached
-    return cached
-
-
-_SCHEMA_CACHE: dict = {}
-
-from .events_q import _DRIFT_BINS, _DRIFT_W  # noqa: E402  (shared drift binning contract)
-from .wordcount_q import WC_ORACLE as _WC_ORACLE  # noqa: E402  (single source of truth)
+from .events_q import _DRIFT_BINS, _DRIFT_W  # shared drift binning contract
+from .wordcount_q import WC_ORACLE as _WC_ORACLE  # single source of truth
 
 
 @query("stream_wordcount_file", oracle=_WC_ORACLE)
@@ -72,10 +42,7 @@ def stream_wordcount_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CountWords via the stateful API: per-key state in the state store,
     emission logic in an Arrow-batched pandas fn (update mode, single-batch
     replay -> one emitted row per word carrying the final running total)."""
-    schema = _raw_schema(spark, f"{sf_dir}/documents.parquet")
-    stream = spark.readStream.schema(schema).parquet(
-        stream_dir_for(f"{sf_dir}/documents.parquet")
-    )
+    stream = replay(spark, f"{sf_dir}/documents.parquet")
     tokens = tokenize(stream.select(F.col("text").alias("sentence")), "sentence").select("word")
     return run_to_completion(final_state_counts(tokens), output_mode="update")
 
@@ -91,12 +58,7 @@ def stream_wordcount_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling windows over the events stream (file replay);
     complete mode -> final windows equal the batch twin ev_tumbling_hour."""
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     agg = (
         stream.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
@@ -132,10 +94,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("lifetime_events"))
     )
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(schema).parquet(
-        stream_dir_for(f"{sf_dir}/events.parquet")
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     enriched = stream.join(maybe_broadcast(static_profiles), "user_id")
     agg = enriched.groupBy(
         "event_type", (F.col("lifetime_events") >= 20).alias("heavy_user")
@@ -146,7 +105,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _view_purchase_stream_join(
-    spark, schema, src: str, how: str, one_file_per_trigger: bool = False
+    spark, src: str, how: str, files_per_trigger: int | None = None
 ):
     """Shared topology of the two stream-stream conversion joins (r08
     review: the side builder and join/select block were copy-pasted between
@@ -157,12 +116,8 @@ def _view_purchase_stream_join(
     replay needs that)."""
 
     def side(event_type: str, alias: str):
-        reader = spark.readStream.schema(schema)
-        if one_file_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", "1")
         return (
-            reader.parquet(src)
-            .transform(normalize_event_ts)
+            replay(spark, src, files_per_trigger=files_per_trigger)
             .filter(F.col("event_type") == event_type)
             .selectExpr(f"event_id AS {alias}_id", "user_id", f"ts AS {alias}_ts")
             .withWatermark(f"{alias}_ts", "2 hours")
@@ -202,9 +157,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join state is bounded (Spark purges buffered rows once the watermark
     passes the range); inner-join matches emit as they arrive, so the
     complete replayed result equals the batch join."""
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    src = stream_dir_for(f"{sf_dir}/events.parquet")
-    joined = _view_purchase_stream_join(spark, schema, src, "inner")
+    joined = _view_purchase_stream_join(spark, f"{sf_dir}/events.parquet", "inner")
     return run_to_completion(joined, output_mode="append")
 
 
@@ -243,8 +196,7 @@ def stream_sentences_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_golden(
             spark, n_rows, sentence_size=size, sample_period=period, seed=seed
         ).write.mode("overwrite").parquet(path)
-    schema = _raw_schema(spark, path)
-    stream = spark.readStream.schema(schema).parquet(path)
+    stream = replay(spark, path)
     counts = tokenize(stream, text_col="sentence", out_col="word").groupBy("word").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -291,10 +243,7 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     for time-bounded streams ``dropDuplicatesWithinWatermark`` caps it by
     eviction instead — exercised in tests/test_watermark.py semantics.
     """
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(schema).parquet(
-        stream_dir_for(f"{sf_dir}/events.parquet")
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     deduped = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
@@ -331,12 +280,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale this is the one window type whose state merges ranges —
     watermark + append mode bound retention for unbounded streams.
     """
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     sw = F.session_window("ts", "30 minutes")
     agg = (
         stream.groupBy(sw, "user_id")
@@ -372,12 +316,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1 h length, 30 min hop) on the LIVE event stream —
     each event updates two window states per micro-batch; complete mode,
     same oracle as the batch twin ev_sliding_window."""
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     agg = (
         stream.groupBy(F.window("ts", "1 hour", "30 minutes"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
@@ -420,10 +359,8 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteed to wait for (no reliance on no-data-batch timing).  Sentinels
     carry negative event_ids and are filtered after the join.  At scale this
     is exactly how a bounded backfill through a streaming job is drained."""
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    src = _left_join_stream_dir(spark, sf_dir, schema)
     joined = _view_purchase_stream_join(
-        spark, schema, src, "left_outer", one_file_per_trigger=True
+        spark, _left_join_stream_dir(spark, sf_dir), "left_outer", files_per_trigger=1
     )
     # The sentinel filter must run on the RESULT table, not in the stream:
     # in-stream, Catalyst pushes `view_id >= 0` through the left-outer join
@@ -438,7 +375,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _left_join_stream_dir(spark: SparkSession, sf_dir: str, schema) -> str:
+def _left_join_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage events.parquet plus two watermark-flush sentinel files.
 
     Layout (file source processes in mtime order, one file per trigger):
@@ -517,7 +454,7 @@ def _left_join_stream_dir(spark: SparkSession, sf_dir: str, schema) -> str:
         )
         # conform to the events schema (missing columns -> NULL literals)
         cols = []
-        for f in schema.fields:
+        for f in raw_schema(spark, f"{sf_dir}/events.parquet").fields:
             if f.name == "ts" and f.dataType.simpleString() == "bigint":
                 # nanos fixture vintage (io.normalize_event_ts): a plain
                 # timestamp->bigint cast would yield SECONDS, not nanos
@@ -575,10 +512,7 @@ def stream_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the full corpus per ingest; the batch oracle (distinct texts per
     source over the gated set) pins that replaying the stream admits exactly
     the batch-correct set."""
-    schema = _raw_schema(spark, f"{sf_dir}/documents.parquet")
-    stream = spark.readStream.schema(schema).parquet(
-        stream_dir_for(f"{sf_dir}/documents.parquet")
-    )
+    stream = replay(spark, f"{sf_dir}/documents.parquet")
     gated = stream.filter(
         (F.col("n_chars") >= 100)
         & F.col("lang").isin("en", "fr", "de", "es")
@@ -643,12 +577,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as the batch twin — the point of the pair is that the identical
     ``session_window(gap_expr)`` expression produces identical sessions in
     both engines."""
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     gap = F.when(F.col("event_type") == "purchase", "45 minutes").otherwise(
         "30 minutes"
     )
@@ -697,12 +626,7 @@ def stream_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     current-state table.  In production this runs in update mode so each
     micro-batch emits only the keys it changed; complete-mode replay here
     makes the final table directly oracle-comparable."""
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     agg = (
         stream.groupBy("user_id", "event_type")
         .agg(
@@ -783,12 +707,7 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume; binning/day-keying are map-side expressions before the one
     stateful exchange.  The post-stream PSI join runs over that same tiny
     cell table."""
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     smooth = F.lit(float(_DRIFT_BINS))
     binned = stream.select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -983,13 +902,8 @@ def stream_timeout_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    src = _left_join_stream_dir(spark, sf_dir, schema)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .transform(normalize_event_ts)
+        replay(spark, _left_join_stream_dir(spark, sf_dir), files_per_trigger=1)
         .withWatermark("ts", "1 second")
         .select("user_id", "ts", "value")
     )
@@ -1085,13 +999,8 @@ def stream_timeout_flush_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracks the active working set too."""
     from ..streaming.tws import tws_timeout_flush
 
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    src = _left_join_stream_dir(spark, sf_dir, schema)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .transform(normalize_event_ts)
+        replay(spark, _left_join_stream_dir(spark, sf_dir), files_per_trigger=1)
         .withWatermark("ts", "1 second")
         .select("user_id", "ts", "value")
     )
@@ -1140,12 +1049,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by window start (bounded frames), never the event stream."""
     from pyspark.sql import Window
 
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     agg = (
         stream.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1217,13 +1121,8 @@ def stream_session_paths_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials, and the top-20 is TakeOrderedAndProject."""
     from ..streaming.tws import tws_session_paths
 
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    src = _left_join_stream_dir(spark, sf_dir, schema)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .transform(normalize_event_ts)
+        replay(spark, _left_join_stream_dir(spark, sf_dir), files_per_trigger=1)
         .withWatermark("ts", "1 second")
         .select("user_id", "ts", "event_id", "event_type")
     )
@@ -1286,13 +1185,8 @@ def stream_windowed_topk_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.tws import tws_windowed_counts
 
-    schema = _raw_schema(spark, f"{sf_dir}/events.parquet")
-    src = _left_join_stream_dir(spark, sf_dir, schema)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .transform(normalize_event_ts)
+        replay(spark, _left_join_stream_dir(spark, sf_dir), files_per_trigger=1)
         .withWatermark("ts", "1 second")
         .select(
             F.when(F.col("user_id") < 0, F.lit("__sentinel"))
@@ -1327,46 +1221,16 @@ def stream_windowed_topk_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_dedup_ctes() -> str:
-    """The shared CTE chain of the streaming-dedup oracles: tokenize ->
-    shingle -> md5 hash -> 32-perm MinHash signature -> 8 band keys ->
-    per-bucket owners (min doc_id ever to claim the bucket, standing in
-    for first-arrival under the doc_id-ordered replay contract).
-    Identical signature + banding math to dedup_q's value-checked md5
-    pipeline (same _MD5_PERMS constants)."""
-    from .dedup_q import _MD5_BANDS, _MD5_K, _MD5_PERMS, _P31, _SHINGLE_N
+    """The shared CTE chain of the streaming-dedup oracles: dedup_q's md5
+    MinHash banding chain (the same signature + banding math as the
+    value-checked md5 pipeline) plus per-bucket owners (min doc_id ever to
+    claim the bucket, standing in for first-arrival under the
+    doc_id-ordered replay contract) and the blocked docs."""
+    from .dedup_q import _md5_band_ctes
 
-    r = _MD5_K // _MD5_BANDS
-    mins = ",\n               ".join(
-        f"min(({a} * hm + {b}) % {_P31}) AS m{i}"
-        for i, (a, b) in enumerate(_MD5_PERMS)
-    )
-    band_cases = "\n                 ".join(
-        "WHEN {bi} THEN ".format(bi=bi)
-        + " || ':' || ".join(f"CAST(m{bi * r + j} AS VARCHAR)" for j in range(r))
-        for bi in range(_MD5_BANDS)
-    )
-    band_vals = ", ".join(f"({bi})" for bi in range(_MD5_BANDS))
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(regexp_split_to_array(text, '\\W+'), x -> length(x) > 0) AS t
-        FROM documents
-    ), sh AS (
-        SELECT DISTINCT doc_id, array_to_string(t[i:i+{_SHINGLE_N - 1}], ' ') AS s
-        FROM toks, unnest(range(1, len(t) - {_SHINGLE_N - 2})) AS u(i)
-    ), hm AS (
-        SELECT doc_id, ('0x' || substring(md5(s), 1, 15))::BIGINT % {_P31} AS hm
-        FROM sh
-    ), sig AS (
-        SELECT doc_id,
-               {mins}
-        FROM hm GROUP BY doc_id
-    ), bands AS (
-        SELECT doc_id, band_idx,
-               CASE band_idx
-                 {band_cases}
-               END AS band_key
-        FROM sig CROSS JOIN (VALUES {band_vals}) AS bb(band_idx)
-    ), owners AS (
+    return (
+        _md5_band_ctes()
+        + """, owners AS (
         SELECT band_idx, band_key, min(doc_id) AS owner
         FROM bands GROUP BY band_idx, band_key
     ), blocked AS (
@@ -1375,6 +1239,7 @@ def _stream_dedup_ctes() -> str:
         WHERE o.owner < b.doc_id
         GROUP BY b.doc_id
     )"""
+    )
 
 
 def _stream_dedup_minhash_oracle() -> str:
@@ -1447,12 +1312,7 @@ def _stream_dedup_blocked_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup_q import _MD5_BANDS, _MD5_K, _MD5_PERMS, _P31, _SHINGLE_N
     from ..streaming.tws import tws_bucket_claims
 
-    schema = _raw_schema(spark, f"{sf_dir}/documents.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/documents.parquet"))
-        .select("doc_id", "text")
-    )
+    stream = replay(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     toks = F.filter(
         F.split(F.col("text"), r"\W+"), lambda x: F.length(x) > 0
     )
@@ -1573,10 +1433,5 @@ def stream_mm_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a batch decode job later."""
     from ..operators.multimodal import decode_ppm_stats
 
-    schema = _raw_schema(spark, f"{sf_dir}/documents.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/documents.parquet"))
-        .select("doc_id")
-    )
+    stream = replay(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     return run_to_completion(decode_ppm_stats(stream), output_mode="append")

@@ -926,9 +926,7 @@ _NOVELTY_N = 3
     "text_ngram_novelty",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(text, '\\W+'),
-                           x -> length(x) > 0) AS t
+        SELECT doc_id, {_TOKS} AS t
         FROM documents
     ), sh AS (
         SELECT DISTINCT doc_id, array_to_string(t[i:i+{_NOVELTY_N - 1}], ' ') AS s

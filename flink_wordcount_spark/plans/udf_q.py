@@ -16,6 +16,7 @@ from ..functions.udfs import (
     register_sql_udfs,
 )
 from ..io import table
+from ..operators.text import TOKS_SQL
 from .catalog import query
 
 
@@ -91,10 +92,9 @@ def udf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udtf_token_positions",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(text, '\W+'), x -> length(x) > 0) AS t
+        SELECT doc_id, {TOKS_SQL} AS t
         FROM documents
     )
     SELECT doc_id, CAST(u.i - 1 AS INTEGER) AS pos, t[u.i] AS word

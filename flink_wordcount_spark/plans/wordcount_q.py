@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..operators.text import token_count_expr, top_k_words, word_counts
+from ..operators.text import TOKS_SQL, token_count_expr, top_k_words, word_counts
 from .catalog import query
 
 #: Canonical DuckDB twin of operators.text.tokenize over `documents` —
@@ -65,10 +65,8 @@ def wordcount_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "wordcount_per_doc_topk",
-    oracle="""
-    SELECT doc_id,
-           len(list_filter(regexp_split_to_array(text, '\\W+'),
-                           x -> length(x) > 0)) AS n_tokens
+    oracle=f"""
+    SELECT doc_id, len({TOKS_SQL}) AS n_tokens
     FROM documents
     ORDER BY n_tokens DESC, doc_id
     LIMIT 50

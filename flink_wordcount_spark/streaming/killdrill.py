@@ -59,12 +59,9 @@ ckpt = os.path.join({tmp!r}, "ckpt")
  .write.mode("overwrite").parquet(data_dir))
 
 from flink_wordcount_spark.operators.text import tokenize
-from flink_wordcount_spark.streaming.wordcount import drain
-schema = spark.read.parquet(data_dir).schema
-stream = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(data_dir))
-counts = (tokenize(stream, text_col="sentence", out_col="word")
-          .groupBy("word").agg(F.count(F.lit(1)).alias("cnt")))
+from flink_wordcount_spark.streaming.wordcount import drain, file_replay_wordcount
+counts = file_replay_wordcount(spark, data_dir, text_col="sentence",
+                               max_files_per_trigger=2)
 q = (counts.writeStream.outputMode("complete").format("memory")
      .queryName("killtest").option("checkpointLocation", ckpt).start())
 

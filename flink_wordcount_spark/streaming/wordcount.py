@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..io import replay
 from ..operators.text import tokenize
 from ..session import scoped_confs
 
@@ -30,22 +31,6 @@ from ..session import scoped_confs
 #: it stops the query: a Python worker that never connects back must fail
 #: one caller, not hang it until an outer kill.
 DRAIN_DEADLINE_S = 600
-
-
-def stream_dir_for(parquet_file: str) -> str:
-    """Stage a single parquet file as a streamable directory (the file
-    source requires a directory); symlinks keep this zero-copy."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.sha1(parquet_file.encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"fws_streamdir_{key}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "part-00000.parquet")
-    if not os.path.exists(link):
-        os.symlink(parquet_file, link)
-    return d
 
 
 def tokens_stream(sentences: DataFrame, rebalance: int | None = None) -> DataFrame:
@@ -90,13 +75,7 @@ def file_replay_wordcount(
     word count over the same files — the golden equivalence SURVEY §5.2.3
     uses to make streaming oracle-checkable.
     """
-    schema = spark.read.parquet(parquet_path).schema
-    if parquet_path.endswith(".parquet"):
-        parquet_path = stream_dir_for(parquet_path)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_path)
+    stream = replay(spark, parquet_path, files_per_trigger=max_files_per_trigger)
     toks = tokenize(stream.select(F.col(text_col).alias("sentence")), "sentence")
     return toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 

@@ -6,7 +6,8 @@ raw nanos bigint under ``nanosAsLong``), TIMESTAMP(MICROS) (read as
 comparison assumes the normalizer maps all three to the SAME session-UTC
 micros timestamp; until now only the current fixture's branch was exercised.
 The nanos branch must floor-truncate with integer ``div`` (DuckDB's ns->us
-read) — float math would lose exactness past 2^53 epoch-nanos.
+read) — float math would lose exactness past 2^53 epoch-nanos.  A stream
+replay (``io.replay``) must normalize exactly as a batch read (``io.table``).
 """
 
 from __future__ import annotations
@@ -15,7 +16,8 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from flink_wordcount_spark.io import normalize_event_ts
+from flink_wordcount_spark.io import normalize_event_ts, replay, table
+from flink_wordcount_spark.streaming.wordcount import run_to_completion
 
 # 2023-11-14T22:13:20.123456789 UTC — epoch nanos past 2^53 (float math
 # would corrupt the low digits), micros floor-truncates the trailing 789.
@@ -36,6 +38,8 @@ def test_timestamp_vintage_passes_through(spark):
     out = normalize_event_ts(df)
     assert out is df  # no-op branch: the plan is untouched
     assert out.collect()[0]["ts"] == _EXPECT
+    no_ts = spark.createDataFrame([(1,)], "doc_id long")
+    assert normalize_event_ts(no_ts) is no_ts  # non-events fixtures
 
 
 def test_ntz_vintage_casts_to_session_utc(spark):
@@ -61,3 +65,31 @@ def test_all_vintages_agree(spark):
     )
     vals = {frame.collect()[0]["ts"] for frame in (nanos, ts, ntz)}
     assert vals == {_EXPECT}
+
+
+def test_nanos_vintage_replays_like_a_batch_read(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file read as a stream gives the same ``ts``
+    values as the batch read of that file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos = [_NANOS + i * 60_000_000_000 for i in range(3)]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "user_id": pa.array([7, 7, 8], pa.int64()),
+                "event_type": ["view", "click", "purchase"],
+                "value": [1.0, 2.0, 3.0],
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    streamed = run_to_completion(
+        replay(spark, str(tmp_path)).select("event_id", "ts"), output_mode="append"
+    )
+    batch = table(spark, str(tmp_path), "events").select("event_id", "ts")
+    got = sorted(tuple(r) for r in streamed.collect())
+    assert got == sorted(tuple(r) for r in batch.collect())
+    assert got[0] == (1, _EXPECT)

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from flink_wordcount_spark.io import normalize_event_ts
+from flink_wordcount_spark.io import normalize_event_ts, raw_schema, replay
 from flink_wordcount_spark.operators.text import word_counts
 from flink_wordcount_spark.session import ROCKSDB_STATE, scoped_confs
 from flink_wordcount_spark.streaming.metrics import LatencyRecorder, ThroughputListener
@@ -48,10 +48,7 @@ def test_drain_raises_when_a_batch_outlasts_the_deadline(spark, sf_dir, monkeypa
         time.sleep(60)
         return text
 
-    docs = f"{sf_dir}/documents.parquet"
-    stream = spark.readStream.schema(spark.read.parquet(docs).schema).parquet(
-        wordcount.stream_dir_for(docs)
-    )
+    stream = replay(spark, f"{sf_dir}/documents.parquet")
     q = wordcount.start_to_memory(
         stream.select(stuck("text").alias("text")), output_mode="append"
     )
@@ -231,17 +228,13 @@ def test_tws_wordcount_or_env_gate(spark, sf_dir):
     every worker that unpickles the processor. The skip survives only for
     environments with no protobuf runtime anywhere on disk."""
     from flink_wordcount_spark.streaming.tws import tws_available, tws_wordcount
-    from flink_wordcount_spark.streaming.wordcount import stream_dir_for
     from flink_wordcount_spark.operators.text import tokenize, word_counts
 
     if not tws_available():
         pytest.skip("no google.protobuf runtime on this machine (native or "
                     "bundled): transformWithState gated off; "
                     "applyInPandasWithState path covers stateful parity")
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        stream_dir_for(f"{sf_dir}/documents.parquet")
-    )
+    stream = replay(spark, f"{sf_dir}/documents.parquet")
     tokens = tokenize(stream.select(F.col("text").alias("sentence")), "sentence").select("word")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prev_provider = spark.conf.get(provider_key, None)
@@ -286,14 +279,7 @@ def test_streaming_session_window_subset_of_batch(spark, sf_dir):
     emitted session matches the batch recomputation exactly; sessions still
     within the watermark horizon at end-of-stream stay buffered (append-mode
     contract), so the streamed set is a prefix-closed subset."""
-    from flink_wordcount_spark.streaming.wordcount import stream_dir_for
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stream_dir_for(f"{sf_dir}/events.parquet"))
-        .transform(normalize_event_ts)
-    )
+    stream = replay(spark, f"{sf_dir}/events.parquet")
     agg = (
         stream.withWatermark("ts", "1 minute")
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -462,7 +448,7 @@ def test_left_join_flush_sentinels_contract(spark, sf_dir):
     from flink_wordcount_spark.plans.streaming_q import _left_join_stream_dir
 
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    d = _left_join_stream_dir(spark, sf_dir, schema)
+    d = _left_join_stream_dir(spark, sf_dir)
     parts = sorted(p for p in os.listdir(d) if p.endswith(".parquet"))
     assert parts == ["part-00000.parquet", "part-00001.parquet", "part-00002.parquet"]
     mtimes = [os.stat(os.path.join(d, p)).st_mtime for p in parts]
@@ -474,6 +460,9 @@ def test_left_join_flush_sentinels_contract(spark, sf_dir):
         assert r.user_id is not None and r.user_id < 0
         assert r.event_id < 0
         assert r.ts.year >= 2030
+    # the sentinel files conform to the events schema, so replaying the
+    # staged directory reads the same schema as the fixture itself
+    assert raw_schema(spark, d) == schema
 def test_protobuf_bootstrap_purges_jar_poisoned_namespace(tmp_path):
     """The worker-process failure mode, reproduced without Spark: the
     spark-core JAR on sys.path makes `google.protobuf` import as an EMPTY
