@@ -1549,11 +1549,14 @@ def main() -> int:
     # warm the JVM/codegen path once so per-query numbers measure the plan
     QUERIES["wordcount_stats"](spark, sf_dir).collect()
 
-    # Two passes, per-query min: pass 1 pays each plan's one-time JIT/codegen
+    # Two passes, per-query min: pass 1 pays each plan's JIT/codegen
     # compilation (measured ~4x: text_quality 7.6 s cold vs 0.9 s warm on an
-    # idle box), which is amortized to zero on any long-lived cluster — the
-    # warm number is the plan's cost. Both raw pass totals are published so
-    # the cold-start tax stays auditable.
+    # idle box).  That cost is paid once only while Spark's compiled-class
+    # cache holds the working set: at its default of 100 entries, a second
+    # sweep of the whole catalog at sf0.01 recompiled 3,561 of its 3,576
+    # first-sweep compilations; with get_spark's 4096 entries it compiled 56
+    # (4 cores).  So pass 2's number is the plan's warm cost.  Both raw pass
+    # totals are published so the cold-start tax stays auditable.
     timings = run_suite(spark, sf_dir)
     suite_passes = [round(sum(timings.values()), 3)]
     second = run_suite(spark, sf_dir)

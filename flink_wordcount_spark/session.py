@@ -11,6 +11,9 @@ Scale notes (100 TB / 1000-executor design):
   scale set it ~2-3x total cores and let AQE coalesce.
 - Session timezone is pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive UTC) and are cluster-independent.
+- Spark's compiled-class cache (``spark.sql.codegen.cache.maxEntries``) is
+  sized in ``get_spark()``.  It is a static conf, read once per JVM, so a
+  session the driver hands in keeps Spark's default of 100 entries.
 """
 
 from __future__ import annotations
@@ -170,6 +173,13 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def codegen_compilations(spark: SparkSession) -> int:
+    """Janino compilations in this JVM so far; with a cache that holds the
+    working set, one per distinct generated class."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_spark(app_name: str = "flink_wordcount_spark", cpus: int | None = None) -> SparkSession:
     """Local session used by tests and bench.py.
 
@@ -186,6 +196,14 @@ def get_spark(app_name: str = "flink_wordcount_spark", cpus: int | None = None) 
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Static conf (a live session refuses it, so it cannot sit in
+        # RUNTIME_CONFS): the JVM-wide cache of Janino-compiled classes.
+        # Spark's default of 100 is below one tpch pass (~115 classes), so
+        # every warm pass recompiled 39-51 of them and the JIT re-optimized
+        # their hot loops.  One fresh sweep of the whole catalog compiles
+        # 2,552 distinct classes (`python scripts/driver_sim.py` at sf0.01
+        # prints the count); 4096 is the next power of two.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -24,7 +24,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from flink_wordcount_spark.oracle import compare  # noqa: E402
-from flink_wordcount_spark.session import get_spark  # noqa: E402
+from flink_wordcount_spark.session import codegen_compilations, get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -72,6 +72,7 @@ def main() -> int:
         if not ok:
             failed.append(name)
 
+    print(f"codegen: {codegen_compilations(spark)} Janino compilations")
     print(json.dumps({"total": len(run_names), "failed": failed}))
     if names_filter is None and limit is None:
         cost = {

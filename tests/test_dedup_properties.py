@@ -2,14 +2,19 @@
 pure-Python reference: the inverted-index pair join must equal brute-force
 pairwise Jaccard on any corpus, and containment must dominate Jaccard.
 The rewritten dedup plans (prefix-filtered Jaccard, the shared-span
-complement) must equal their definitional forms on any input."""
+complement) must equal their definitional forms on any input, and the
+digest registry must classify exactly the arriving batch."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from flink_wordcount_spark.operators.dedup import jaccard_pairs, shingle_hashes
+from flink_wordcount_spark.plans import QUERIES
+from flink_wordcount_spark.plans.dedup_q import _NEW_SHARD_MOD, _NEW_SHARD_RES
 
 _N = 3
 
@@ -104,7 +109,6 @@ def test_shared_spans_hashed_agrees_with_string_keyed(spark, sf_dir):
     shape) must agree row-for-row with the string-keyed twin — any
     divergence means a real xxhash64 collision, which at fixture scale
     (~1e-11) indicates a plumbing bug, not chance."""
-    from flink_wordcount_spark.plans import QUERIES
 
     a = sorted(map(tuple, QUERIES["dedup_shared_spans"](spark, sf_dir).collect()))
     b = sorted(
@@ -119,7 +123,6 @@ def test_shared_span_complement_equals_join_rollup(spark, sf_dir):
     output must keep exactly the docs with n_shared >= 1 (the old inner
     hits-join semantics)."""
     from flink_wordcount_spark.io import table
-    from flink_wordcount_spark.plans import QUERIES
     from flink_wordcount_spark.plans.dedup_q import _SPAN_W
 
     sp = shingle_hashes(
@@ -194,3 +197,55 @@ def test_prefix_jaccard_equals_inverted_index_adversarial(spark):
         new = jaccard_pairs(sh, t, prefix=True).orderBy("id_a", "id_b").collect()
         assert old == new, f"threshold {t}: {old} != {new}"
         assert len(old) > 0  # the family must actually exercise the join
+
+
+def test_digest_registry_covers_exactly_the_new_batch(spark, sf_dir):
+    rows = QUERIES["dedup_digest_registry"](spark, sf_dir).collect()
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    new_ids = {
+        r["doc_id"]
+        for r in d.filter(
+            (F.col("doc_id") % _NEW_SHARD_MOD) == _NEW_SHARD_RES
+        ).collect()
+    }
+    assert {r["doc_id"] for r in rows} == new_ids
+    assert len(rows) == len(new_ids), "one verdict per new-batch doc"
+
+
+def test_digest_registry_verdict_semantics(spark, sf_dir):
+    """Per-digest-group structure: within the new batch, a digest group is
+    either entirely 'registry_dup' (the digest exists in a prior snapshot)
+    or exactly one 'novel' head plus 'batch_dup' tails (first-by-doc_id
+    wins).  The fixture's template override must exercise every dup branch."""
+    rows = QUERIES["dedup_digest_registry"](spark, sf_dir).collect()
+    by_digest: dict[str, list] = {}
+    for r in rows:
+        assert r["verdict"] in {"novel", "registry_dup", "batch_dup", "no_text"}
+        if r["digest16"] is not None:
+            by_digest.setdefault(r["digest16"], []).append(r)
+        else:
+            assert r["verdict"] == "no_text"
+    for grp in by_digest.values():
+        verdicts = Counter(g["verdict"] for g in grp)
+        if "registry_dup" in verdicts:
+            assert verdicts == {"registry_dup": len(grp)}
+        else:
+            assert verdicts["novel"] == 1
+            assert verdicts["batch_dup"] == len(grp) - 1
+            head = min(grp, key=lambda g: g["doc_id"])
+            assert head["verdict"] == "novel"
+    totals = Counter(r["verdict"] for r in rows)
+    assert totals["registry_dup"] > 0, "fixture must exercise the registry hit"
+    assert totals["batch_dup"] > 0, "fixture must exercise the in-batch dup"
+    assert totals["novel"] > 0
+
+
+def test_digest_registry_no_broadcast_of_registry(spark, sf_dir):
+    """The registry side is corpus-sized at 100 TB: the probe must be a
+    shuffle/bucket join on digest, never a BroadcastExchange (AQE may still
+    choose one at toy scale from runtime stats, but the COMPILED plan must
+    not demand it)."""
+    plan = QUERIES["dedup_digest_registry"](
+        spark, sf_dir
+    )._jdf.queryExecution().optimizedPlan().toString()
+    assert "broadcast" not in plan.lower(), plan
