@@ -198,11 +198,12 @@ def get_spark(app_name: str = "flink_wordcount_spark", cpus: int | None = None) 
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Static conf (a live session refuses it, so it cannot sit in
         # RUNTIME_CONFS): the JVM-wide cache of Janino-compiled classes.
-        # Spark's default of 100 is below one tpch pass (~115 classes), so
-        # every warm pass recompiled 39-51 of them and the JIT re-optimized
-        # their hot loops.  One fresh sweep of the whole catalog compiles
-        # 2,552 distinct classes (`python scripts/driver_sim.py` at sf0.01
-        # prints the count); 4096 is the next power of two.
+        # Spark's default of 100 is below one pass of perfbench's tpch mix
+        # (114-115 classes), so every warm pass recompiled 65 of them at
+        # sf0.1 and the JIT re-optimized their hot loops.  One fresh sweep
+        # of the whole catalog compiles 2,552 distinct classes
+        # (`python scripts/driver_sim.py` at sf0.01 prints the count); 4096
+        # is the next power of two.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in RUNTIME_CONFS.items():
